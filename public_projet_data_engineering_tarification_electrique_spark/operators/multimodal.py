@@ -175,18 +175,6 @@ def byte_histogram_features(
     return with_payload.mapInPandas(hist, schema=FEATURE_SCHEMA)
 
 
-def resize_image(payload: bytes, width: int, height: int):
-    """Real image resize: Pillow's resampling when available, else the
-    deterministic nearest-neighbor kernel over the vendored PNG decode
-    (raises for non-PNG payloads without Pillow — see decode_image)."""
-    img = decode_image(payload)
-    if hasattr(img, "resize"):  # PIL image
-        return img.resize((width, height))
-    from .pngcodec import resize_nearest
-
-    return resize_nearest(img, width, height)
-
-
 DECODE_STATS_SCHEMA = (
     "doc_id long, width int, height int, pixel_sum long, "
     "rs_width int, rs_height int, pixel_sum_resized long"

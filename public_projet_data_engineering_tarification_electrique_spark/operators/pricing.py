@@ -1,10 +1,10 @@
-"""The serving read path (V1-V3) as ONE lazy batch-scoring plan.
+"""The serving read path (V1-V3): one lazy batch plan, and ``score_one``.
 
 Reference lifecycle (SURVEY.md §3.1): per request, two sequential
 BigQuery round-trips (30-day regional average, reference:api.py:36-61;
 city α lookup, reference:api.py:64-92) then Python scalar math
-(reference:api.py:111-127). Here the whole path is a single DataFrame
-plan over a requests table:
+(reference:api.py:111-127). Batch scoring runs the whole path as a
+single DataFrame plan over a requests table:
 
     requests ⋈ (daily → trailing-window filter → avg)          [broadcast]
              ⋈ (annual → lead-over-year → α clamp)             [broadcast]
@@ -23,15 +23,33 @@ Scale: both dimension inputs collapse to small aggregates (≤ #regions,
 requests fact side never shuffles. At 100 TB of requests this plan is
 scan → map-side join ×2 → project: zero wide shuffles after the two
 (small) dimension aggregations.
+
+``score_one`` (the ``GET /price`` twin) answers one request with no
+Spark job once warm. The same two aggregations are collected into a
+``region → conso30`` and a ``(nom_commune, code_commune) → α`` map per
+dimension snapshot, the request plus its two looked-up values become
+one Arrow-backed local row, and the batch plan's own status/price
+projection is folded into that row by Catalyst
+(``ConvertToLocalRelation``), so ``head()`` runs on the driver.
+Freshness rule: a cached ``daily``/``annual`` pair is a snapshot, and
+its maps are kept for as long as both frames stay cached and alive;
+pass new frames (or unpersist these) to see new data. Frames that are
+not cached are re-aggregated on every call, so their reads stay live.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import threading
+import weakref
+from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..functions.pricing import (
     alpha_clamped,
@@ -39,7 +57,7 @@ from ..functions.pricing import (
     household_consumption_kwh,
     m_factor,
 )
-from ..schemas import PRICING_REQUEST_REQUIRED
+from ..schemas import PRICING_REQUEST, PRICING_REQUEST_REQUIRED
 
 
 def validate_requests(requests: DataFrame) -> DataFrame:
@@ -138,6 +156,9 @@ STATUS_MISSING_FIELD = "missing_field"
 STATUS_UNKNOWN_REGION = "unknown_region"
 STATUS_UNKNOWN_CITY = "unknown_city"
 
+#: join key of the α dimension (``city_alpha``'s default ``key_cols``)
+_CITY_KEY = ("nom_commune", "code_commune")
+
 
 def score_requests_with_status(
     requests: DataFrame,
@@ -171,13 +192,22 @@ def score_requests_with_status(
         region_trailing_avg(daily, run_date, region_col=region_col)
     )
     alpha = F.broadcast(city_alpha(annual, year_n))
+    return _price_projection(
+        requests.join(region_avg, on=region_col, how="left").join(
+            alpha, on=list(_CITY_KEY), how="left"
+        )
+    )
+
+
+def _price_projection(scored: DataFrame) -> DataFrame:
+    """status, conso_foyer, m_factor and price over request rows that
+    already carry their looked-up ``conso30`` and ``alpha`` (NULL = no
+    dimension row). The one projection behind both serving paths."""
     missing = F.lit(False)
     for c in sorted(PRICING_REQUEST_REQUIRED):
         missing = missing | F.col(c).isNull()
     return (
-        requests.join(region_avg, on=region_col, how="left")
-        .join(alpha, on=["nom_commune", "code_commune"], how="left")
-        .withColumn(
+        scored.withColumn(
             "status",
             F.when(missing, F.lit(STATUS_MISSING_FIELD))
             .when(F.col("conso30").isNull(), F.lit(STATUS_UNKNOWN_REGION))
@@ -201,6 +231,92 @@ def score_requests_with_status(
     )
 
 
+#: one request with every field nullable: an absent key is a NULL field
+_REQUEST = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in PRICING_REQUEST.fields]
+)
+#: the request columns in the order the batch plan's two USING joins
+#: leave them (each join moves its key columns to the front)
+_JOINED = [*_CITY_KEY, *(n for n in _REQUEST.names if n not in _CITY_KEY)]
+#: the same type checks ``createDataFrame`` runs on a list input (Arrow
+#: would silently accept 95.0 for an int field)
+_verify_request = _make_type_verifier(_REQUEST)
+
+
+class _Lookups(NamedTuple):
+    """One dimension snapshot as driver-side maps, plus the schema of the
+    one-row frame ``score_one`` prices against it."""
+
+    conso30: dict
+    alpha: dict
+    schema: T.StructType
+    arrow_schema: pa.Schema
+
+
+def _collect_lookups(
+    daily: DataFrame, annual: DataFrame, run_date, year_n: int
+) -> _Lookups:
+    region_avg = region_trailing_avg(daily, run_date)
+    alpha = city_alpha(annual, year_n)
+    # NULL keys are left out: the batch plan's equi-joins never match them
+    conso30 = {
+        r["libelle_region"]: r["conso30"]
+        for r in region_avg.collect()
+        if r["libelle_region"] is not None
+    }
+    alphas = {}
+    for r in alpha.collect():
+        key = tuple(r[c] for c in _CITY_KEY)
+        if None not in key:
+            alphas[key] = r["alpha"]
+    schema = T.StructType(
+        [_REQUEST[c] for c in _JOINED]
+        + [
+            T.StructField("conso30", region_avg.schema["conso30"].dataType),
+            T.StructField("alpha", alpha.schema["alpha"].dataType),
+        ]
+    )
+    return _Lookups(conso30, alphas, schema, to_arrow_schema(schema))
+
+
+class _Slot:
+    """A memo entry: filled once, under its own lock, by the first caller."""
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.lookups: _Lookups | None = None
+
+
+#: daily → annual → {(run_date, year_n): _Slot}. Weak keys: an entry is
+#: freed with its frames, and a reused id() can never alias a new frame.
+_SNAPSHOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _lookups(
+    daily: DataFrame, annual: DataFrame, run_date, year_n: int
+) -> _Lookups:
+    """The maps for one (daily, annual, run_date, year_n); memoized only
+    while both frames are cached, i.e. already a snapshot."""
+    if not (daily.is_cached and annual.is_cached):
+        with _SNAPSHOTS_LOCK:
+            if not daily.is_cached:
+                _SNAPSHOTS.pop(daily, None)
+            if not annual.is_cached:
+                for by_annual in _SNAPSHOTS.values():
+                    by_annual.pop(annual, None)
+        return _collect_lookups(daily, annual, run_date, year_n)
+    with _SNAPSHOTS_LOCK:
+        by_annual = _SNAPSHOTS.setdefault(daily, weakref.WeakKeyDictionary())
+        slot = by_annual.setdefault(annual, {}).setdefault(
+            (run_date, year_n), _Slot()
+        )
+    with slot.lock:
+        if slot.lookups is None:
+            slot.lookups = _collect_lookups(daily, annual, run_date, year_n)
+        return slot.lookups
+
+
 def score_one(
     spark,
     request: dict,
@@ -211,23 +327,29 @@ def score_one(
 ):
     """``GET /price`` twin: score ONE request through the same envelope.
 
-    Returns the single result Row — fields include ``price`` and
-    ``status`` (see ``score_requests_with_status``). Absent request keys
-    become NULLs, so a missing field yields ``status='missing_field'``
-    exactly like the reference's 400 (reference:api.py:95-132).
-    """
-    from ..schemas import PRICING_REQUEST
+    Returns the single result Row that ``score_requests_with_status``
+    gives for the same request — same fields in the same order, ending
+    in ``status``, ``conso_foyer``, ``m_factor`` and ``price``. Absent
+    request keys become NULLs, so a missing field yields
+    ``status='missing_field'`` exactly like the reference's 400
+    (reference:api.py:95-132). A value of the wrong type raises the same
+    PySpark error ``createDataFrame`` raises for it.
 
-    values = tuple(
-        request.get(f.name) for f in PRICING_REQUEST.fields
+    The dimensions are looked up in per-snapshot maps (see the module
+    docstring for when they refresh); once they are filled the call
+    launches no Spark job.
+    """
+    values = tuple(request.get(name) for name in _REQUEST.names)
+    _verify_request(values)
+    lookups = _lookups(daily, annual, run_date, year_n)
+    row = dict(zip(_REQUEST.names, values))
+    row["conso30"] = lookups.conso30.get(row["libelle_region"])
+    row["alpha"] = lookups.alpha.get(tuple(row[c] for c in _CITY_KEY))
+    one = spark.createDataFrame(
+        pa.Table.from_pylist([row], schema=lookups.arrow_schema),
+        lookups.schema,
     )
-    nullable = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in PRICING_REQUEST.fields]
-    )
-    one = spark.createDataFrame([values], nullable)
-    return score_requests_with_status(
-        one, daily, annual, run_date, year_n
-    ).head()
+    return _price_projection(one).head()
 
 
 def score_requests(

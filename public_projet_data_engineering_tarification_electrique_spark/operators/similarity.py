@@ -355,21 +355,7 @@ def anchored_neardup(
         .filter(F.col("_p") <= n_probe)
         .select("_id", "_bk", "_aid")
     )
-    # probes feeds BOTH sides of the candidate self-join below — a lazy
-    # localCheckpoint materializes the n·k assignment scoring + window
-    # once at the first action instead of twice (guide §5; the q171
-    # subtree-re-derivation fix). No broadcast sits downstream of this
-    # cut (the candidate join is a shuffle join on (_bk, _aid)), so the
-    # r12 ExistingRDD-loses-size-stats foot-gun does not apply.
-    # probes feeds BOTH sides of the candidate self-join below — a lazy
-    # localCheckpoint materializes the n·k assignment scoring + window
-    # once at the first action instead of twice (guide §5; the q171
-    # subtree-re-derivation fix). No broadcast sits downstream of this
-    # cut (the candidate join is a shuffle join on (_bk, _aid)), so the
-    # r12 ExistingRDD-loses-size-stats foot-gun does not apply.
-    probes = assignments.join(
-        base.select("_id", "_v", "_n"), on="_id"
-    ).localCheckpoint(eager=False)
+    probes = assignments.join(base.select("_id", "_v", "_n"), on="_id")
     a = probes.select(
         F.col("_bk"), F.col("_aid"),
         F.col("_id").alias("id_a"), F.col("_v").alias("_va"),

@@ -415,8 +415,10 @@ def stream_sessionize(
         )
         .withWatermark("_et", watermark)
     )
-    # NULL users keep their own group: xxhash64(NULL) is NULL, which
-    # coalesces to a dedicated bucket id outside the hash range.
+    # xxhash64 skips NULL inputs and returns its seed (42), so NULL users
+    # land in bucket pmod(42, n_buckets) beside real users (the coalesce
+    # never fires); the sessionizer's groupby(dropna=False) keeps them
+    # apart.
     bucket = F.coalesce(
         F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets))),
         F.lit(-1),

@@ -8,7 +8,9 @@ and worked examples (reference:docs/Notice technique.htm:54-96):
 from __future__ import annotations
 
 import datetime as dt
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
@@ -256,3 +258,261 @@ def test_score_one_status_taxonomy(spark):
     assert r.status == "unknown_city" and r.price is None
     daily.unpersist()
     annual.unpersist()
+
+
+# ---------------------------------------------------------------- score_one
+#
+# The serving path prices one request against driver-side lookups of the
+# two dimension aggregates; these tests pin it to the batch envelope.
+
+_DAILY_DDL = (
+    "code_insee_region string, libelle_region string, date date, conso_mwh double"
+)
+_ANNUAL_DDL = (
+    "nom_commune string, code_commune string, conso_moyenne_mwh double, annee int"
+)
+_RUN_DATE, _YEAR_N = dt.date(2024, 1, 30), 2024
+
+
+def _dims(spark):
+    """Small dimensions with every lookup outcome: a NULL-region reading
+    inside the window, a region whose readings are all NULL, a city with
+    only year n, and a city whose key has a NULL part."""
+    day = dt.date(2024, 1, 20)
+    daily = spark.createDataFrame(
+        [
+            ("01", "R1", day, 4000.0),
+            ("01", "R1", dt.date(2024, 1, 25), 5200.0),
+            ("02", "R2", day, 30000.0),
+            ("03", "R3", day, 1234.5),
+            ("04", "ALLNULL", day, None),
+            ("05", None, day, 9999.0),
+        ],
+        _DAILY_DDL,
+    )
+    annual = spark.createDataFrame(
+        [
+            ("A", "1", 400.0, 2024), ("A", "1", 440.0, 2025),
+            ("B", "2", 100.0, 2024), ("B", "2", 200.0, 2025),
+            ("C", "3", 400.0, 2024), ("C", "3", 300.0, 2025),
+            ("OnlyN", "4", 400.0, 2024),
+            ("NullCode", None, 400.0, 2024), ("NullCode", None, 420.0, 2025),
+        ],
+        _ANNUAL_DDL,
+    )
+    return daily, annual
+
+
+def _requests_sample(seed: int, n: int) -> list[dict]:
+    rng = random.Random(seed)
+    regions = ["R1", "R2", "R3", "ALLNULL", "ATLANTIS", None]
+    cities = [("A", "1"), ("B", "2"), ("C", "3"), ("OnlyN", "4"),
+              ("NullCode", None), ("Nowhere", "0"), (None, "1")]
+    out = []
+    for _ in range(n):
+        nom, code = rng.choice(cities)
+        req = {
+            "libelle_region": rng.choice(regions),
+            "nom_commune": nom,
+            "code_commune": code,
+            "nb_personne": rng.randint(1, 6),
+            "nb_m2": rng.randint(10, 250),
+        }
+        if rng.random() < 0.15:
+            del req[rng.choice(sorted(req))]
+        out.append(req)
+    return out
+
+
+def _batch_rows(spark, reqs, daily, annual):
+    """``score_requests_with_status`` over the same requests, by index."""
+    from pyspark.sql import types as T
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_requests_with_status,
+    )
+
+    schema = T.StructType(
+        [T.StructField("idx", T.IntegerType(), False)]
+        + [T.StructField(f.name, f.dataType, True) for f in PRICING_REQUEST.fields]
+    )
+    rows = [(i, *(r.get(f.name) for f in PRICING_REQUEST.fields))
+            for i, r in enumerate(reqs)]
+    scored = score_requests_with_status(
+        spark.createDataFrame(rows, schema), daily, annual, _RUN_DATE, _YEAR_N
+    ).collect()
+    out = {}
+    for r in scored:
+        d = r.asDict()
+        out[d.pop("idx")] = d
+    return out
+
+
+def test_score_one_equals_batch_envelope_row(spark):
+    """Field names, order and values of every ``score_one`` Row equal the
+    batch envelope's row for the same request, over a seeded sample that
+    reaches all four statuses, None request keys and a NULL-region row."""
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_one,
+    )
+
+    daily, annual = (f.cache() for f in _dims(spark))
+    reqs = _requests_sample(seed=11, n=60)
+    want = _batch_rows(spark, reqs, daily, annual)
+    statuses = set()
+    try:
+        for i, req in enumerate(reqs):
+            row = score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
+            got = row.asDict()
+            assert list(got) == list(want[i]), req
+            assert got == want[i], req
+            statuses.add(row.status)
+    finally:
+        daily.unpersist()
+        annual.unpersist()
+    assert statuses == {"ok", "missing_field", "unknown_region", "unknown_city"}
+    assert any(None in r.values() for r in reqs)
+
+
+def _jobs_in(spark, fn):
+    sc = spark.sparkContext
+    group = f"score-one-{random.getrandbits(32)}"
+    sc.setJobGroup(group, "score_one job count", False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_score_one_warm_call_launches_no_job(spark):
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_one,
+    )
+
+    daily, annual = (f.cache() for f in _dims(spark))
+    req = {"libelle_region": "R1", "nom_commune": "A", "code_commune": "1",
+           "nb_personne": 2, "nb_m2": 50}
+    try:
+        score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)  # fills the maps
+        for r in _requests_sample(seed=3, n=5):
+            assert _jobs_in(
+                spark,
+                lambda: score_one(spark, r, daily, annual, _RUN_DATE, _YEAR_N),
+            ) == 0
+    finally:
+        daily.unpersist()
+        annual.unpersist()
+
+
+def test_score_one_uncached_frames_stay_live(spark, tmp_path):
+    """Frames that are not cached are re-read on every call, so a new
+    day appended to a date-partitioned table shows on the next call;
+    cached frames are served from the maps until ``unpersist()``."""
+    import uuid
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_one,
+    )
+
+    daily0, annual = _dims(spark)
+    table = f"score_one_daily_{uuid.uuid4().hex[:8]}"
+    daily0.write.partitionBy("date").option(
+        "path", str(tmp_path / "daily")
+    ).saveAsTable(table)
+    req = {"libelle_region": "R3", "nom_commune": "A", "code_commune": "1",
+           "nb_personne": 2, "nb_m2": 50}
+
+    def append(day, value):
+        spark.createDataFrame(
+            [("03", "R3", value, dt.date(2024, 1, day))],
+            "code_insee_region string, libelle_region string, "
+            "conso_mwh double, date date",
+        ).write.insertInto(table)
+
+    def call():
+        return score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
+
+    try:
+        daily = spark.table(table)
+        assert call().conso30 == 1234.5
+        append(21, 2234.5)
+        assert call().conso30 == 1734.5
+        assert _jobs_in(spark, call) > 0  # re-aggregated, not memoized
+
+        daily.cache()
+        annual.cache()
+        assert call().conso30 == 1734.5
+        assert _jobs_in(spark, call) == 0  # served from the maps
+
+        daily.unpersist()
+        append(22, 334.5)
+        assert call().conso30 == 1267.8333
+        assert call().asDict() == _batch_rows(spark, [req], daily, annual)[0]
+    finally:
+        annual.unpersist()
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_score_one_concurrent_first_calls_fill_maps_once(spark, monkeypatch):
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators import (
+        pricing,
+    )
+
+    fills = []
+    collect = pricing._collect_lookups
+
+    def counting(*args):
+        fills.append(1)
+        return collect(*args)
+
+    monkeypatch.setattr(pricing, "_collect_lookups", counting)
+    daily, annual = (f.cache() for f in _dims(spark))
+    reqs = _requests_sample(seed=5, n=8)
+    start = threading.Barrier(len(reqs))
+
+    def first_call(req):
+        start.wait(timeout=60)
+        return pricing.score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(reqs)) as pool:
+            futures = [pool.submit(first_call, r) for r in reqs]
+            rows = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+        daily.unpersist()
+        annual.unpersist()
+    assert len(fills) == 1
+    assert len(rows) == len(reqs) and all(r.status for r in rows)
+
+
+@pytest.mark.parametrize("nb_m2", [95.0, "95", True, 2**40])
+def test_score_one_rejects_mistyped_field_like_create_dataframe(spark, nb_m2):
+    """An int field given a float, a string, a bool or an out-of-range int
+    raises the error class ``createDataFrame`` raises for a list input."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql import types as T
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_one,
+    )
+
+    req = {"libelle_region": "R1", "nom_commune": "A", "code_commune": "1",
+           "nb_personne": 2, "nb_m2": nb_m2}
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in PRICING_REQUEST.fields]
+    )
+    with pytest.raises(PySparkException) as want:
+        spark.createDataFrame(
+            [tuple(req[f.name] for f in PRICING_REQUEST.fields)], nullable
+        )
+    daily, annual = _dims(spark)
+    with pytest.raises(type(want.value)):
+        score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
