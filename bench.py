@@ -62,9 +62,6 @@ def _noop(df) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # keep the streaming family's micro-batch count at the documented
-    # bench profile unless the caller overrides it
-    os.environ.setdefault("SPARK_GRAFT_STREAM_SLICES", "4")
     t_start = time.perf_counter()
     spark = get_spark(app_name="bench")
     t_session = time.perf_counter() - t_start

@@ -609,60 +609,6 @@ def connected_components_star(
     ).select("node", F.coalesce("_root", "node").alias("component"))
 
 
-def minhash_candidates_native(
-    docs: DataFrame,
-    k: int = 3,
-    num_hash_tables: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash candidate pairs as pure codegen'd expressions — the
-    MLlib-free twin of ``minhash_dedup``'s banded candidate stage.
-
-    One shingle explode → ONE hash aggregation computing all T per-table
-    minima (``min(xxhash64(lit(t), shingle))`` — T agg columns, the
-    packed-aggregate idiom of simhash64) → unpivot to (doc, table, h) →
-    self-join on (table, h). Collision probability per table is the
-    Jaccard similarity, OR-amplified over T tables — identical recall
-    math to MinHashLSH at r=1, b=T, with zero Python/MLlib in the path
-    and no signature materialization barrier.
-    Output: (id_a, id_b) distinct candidate pairs.
-    """
-    sh = ensure_parallelism(docs).select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_shingles(F.col(text_col), k))
-        ).alias("_sh"),
-    )
-    sig = sh.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.lit(t), F.col("_sh"))).alias(f"_h{t}")
-            for t in range(num_hash_tables)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"), F.col(f"_h{t}").alias("h")
-                    )
-                    for t in range(num_hash_tables)
-                ]
-            )
-        ).alias("_b"),
-    ).select(id_col, "_b.t", "_b.h")
-    a = banded.select("t", "h", F.col(id_col).alias("id_a"))
-    b = banded.select("t", "h", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, on=["t", "h"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_dedup_verified(
     docs: DataFrame,
     min_jaccard: float = 0.5,

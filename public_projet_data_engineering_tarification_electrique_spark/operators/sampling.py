@@ -231,19 +231,6 @@ def keep_top_fraction(
     ).withColumnRenamed("_thr", "threshold")
 
 
-def deterministic_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Stable ~fraction sample: keep rows whose hash bucket (of 10 000)
-    falls below fraction·10 000. Unlike ``df.sample`` this is a pure
-    function of the id — re-runs, retries, and repartitions select the
-    SAME rows, which is what makes downstream caches and joins over a
-    sampled corpus reproducible."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must lie in [0, 1], got {fraction}")
-    return df.filter(hash_bucket(F.col(id_col), 10_000, salt=salt) < int(fraction * 10_000))
-
-
 def epoch_upsample(
     docs: DataFrame,
     stratum_col: str,

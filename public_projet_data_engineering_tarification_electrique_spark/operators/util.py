@@ -55,7 +55,7 @@ _NPART_CACHE: dict[tuple[str, tuple[str, ...]], int] = {}
 #: count is NOT a pure function of its input files. Conservative: a
 #: false positive only costs the ~100 ms live probe (old behavior).
 _SHAPE_CHANGING = re.compile(
-    r"\b(Repartition|RebalancePartitions|Join|Aggregate|Window|Sort|"
+    r"\b(Repartition\w*|RebalancePartitions|Join|Aggregate|Window|Sort|"
     r"Union|Deduplicate|Distinct|GlobalLimit|LocalLimit|Limit|Sample|"
     r"CoGroup|FlatMap|MapInPandas|MapInArrow|MapPartitions|Generate|"
     r"LogicalRDD|Intersect|Except|Offset)\b"

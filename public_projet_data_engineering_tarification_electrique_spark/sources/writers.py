@@ -125,62 +125,6 @@ def write_bucketed(
     return qual
 
 
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a directory of many small parquet
-    files into ~``target_file_bytes`` files; returns the file count.
-
-    The standard table-maintenance job: streaming sinks and incremental
-    appends accumulate files far below the HDFS/S3-efficient size, and
-    every later scan pays per-file open/footer costs (and loses row-
-    group parallelism). Sizing uses the SOURCE byte size as the proxy
-    for output size (same codec in ≈ same codec out), listed through the
-    Hadoop FileSystem API — correct for local, HDFS, and s3a paths
-    alike (a driver-side os.walk would silently size remote paths as
-    ZERO and coalesce everything into one task). No data pass; the
-    rewrite itself is one coalesce(n) write, shuffle-free (coalesce
-    only narrows partitioning; compaction does not redistribute).
-
-    Returns the number of files actually written (coalesce produces
-    fewer when the source has fewer partitions than the target count).
-    Raises if the source contains no parquet files — compacting
-    nothing is a caller error, not a 1-file write.
-    """
-    import math
-
-    def _list_parquet_bytes(path: str) -> int:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        it = fs.listFiles(jpath, True)
-        total = 0
-        while it.hasNext():
-            f = it.next()
-            if f.getPath().getName().endswith(".parquet"):
-                total += f.getLen()
-        return total
-
-    total = _list_parquet_bytes(src_path)
-    if total == 0:
-        raise ValueError(f"no parquet files under {src_path!r}")
-    n_target = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src_path)
-    df.coalesce(n_target).write.mode("overwrite").parquet(dst_path)
-    jvm = spark._jvm
-    jdst = jvm.org.apache.hadoop.fs.Path(dst_path)
-    fs = jdst.getFileSystem(spark._jsc.hadoopConfiguration())
-    written = 0
-    it = fs.listFiles(jdst, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            written += 1
-    return written
-
-
 def materialize_once(df: DataFrame, path: str) -> DataFrame:
     """S8 — write-once materialization cache: compute+write the frame the
     first time, read the artifact on every later call.

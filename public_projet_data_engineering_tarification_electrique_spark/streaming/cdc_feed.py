@@ -32,11 +32,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.merge import MergeProjections, merge_write_cdf, src
 from ..operators.util import scratch_dir
 from ..session import configure
-from .daily import stream_shuffle_partitions
+from .runner import _drain
 
 #: per-key CDC digest row: the unit the extractor emits per epoch
 DIGEST_SCHEMA = (
@@ -83,7 +84,6 @@ def stream_cdc_changelog(
     orders: DataFrame,
     epoch_cuts: tuple[str, ...] = ("1996-01-01", "1997-06-01"),
     n_buckets: int = 8,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the CDC stream to completion (availableNow, one epoch file
     per trigger) and return the changelog summary: one row per
@@ -145,8 +145,8 @@ def stream_cdc_changelog(
     # ~0.6 s/batch of driver-side Py4J work — the single largest
     # per-batch cost of this stream.
     proj = MergeProjections(
-        state_cols=[f.split()[0] for f in STATE_SCHEMA.split(", ")],
-        source_cols=[f.split()[0] for f in DIGEST_SCHEMA.split(", ")],
+        state_cols=[f.name for f in StructType.fromDDL(STATE_SCHEMA).fields],
+        source_cols=[f.name for f in StructType.fromDDL(DIGEST_SCHEMA).fields],
         include_preimages=True,
         **merge_kwargs,
     )
@@ -175,14 +175,7 @@ def stream_cdc_changelog(
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", scratch_dir("cdc_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    _drain(stream.writeStream.foreachBatch(_apply), None)
 
     feed = spark.read.schema(
         STATE_SCHEMA + ", _change_type string, _batch_id int"

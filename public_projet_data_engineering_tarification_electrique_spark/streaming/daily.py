@@ -23,24 +23,13 @@ exact semantics of the reference's nightly 02:30 batch.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.util import (
-    hadoop_fs,
-    pinned_shuffle_partitions,
-    scratch_dir,
-)
+from ..operators.util import hadoop_fs, scratch_dir
 from ..session import configure
-
-#: A stateful streaming query materializes one state store PER shuffle
-#: partition, and the count is frozen into the checkpoint at first
-#: start — size it to the stream's state volume, not the batch-tuned
-#: session default (see operators.util.pinned_shuffle_partitions, the
-#: single implementation).
-stream_shuffle_partitions = pinned_shuffle_partitions
+from .runner import _drain, _drain_to_memory
 
 #: events landing schema, per ts flavor. Testdata regenerates between
 #: rounds and has shipped ts as both TIMESTAMP(US) (read as
@@ -160,48 +149,30 @@ def events_stream(spark: SparkSession, events_path: str) -> DataFrame:
     )
 
 
-def stream_daily_event_avg(
-    spark: SparkSession,
-    events_path: str,
-    checkpoint_dir: str | None = None,
-    watermark: str = "2 days",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Run the daily-downsample aggregation as an availableNow stream and
-    return the materialized result (one row per (date, event_type)).
-
-    Mirrors the DAG's transform (groupby day + mean + round,
-    reference:airflow/dags/insert_conso_jour_region_in_bq.py:80-86) as
-    a streaming windowed aggregation with a late-data watermark.
-    """
-    configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_daily_")
-    table = f"daily_event_avg_{uuid.uuid4().hex[:8]}"
-    src = events_stream(spark, stage_landing(events_path, "landing_daily_"))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", "1 day").alias("_w"),
-            F.col("event_type"),
-        )
+def _daily_avg(src: DataFrame) -> DataFrame:
+    """(date, event_type, avg_value): the DAG's transform (groupby day
+    + mean + round, reference:airflow/dags/insert_conso_jour_region_in_bq.py:80-86)
+    as a windowed aggregation with a 2-day late-data watermark."""
+    return (
+        src.withWatermark("ts", "2 days")
+        .groupBy(F.window("ts", "1 day").alias("_w"), F.col("event_type"))
         .agg(F.round(F.avg("value") + 1e-9, 4).alias("avg_value"))
         .select(
-            F.col("_w.start").cast("date").alias("date"),
-            "event_type",
-            "avg_value",
+            F.col("_w.start").cast("date").alias("date"), "event_type", "avg_value"
         )
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+
+
+def stream_daily_event_avg(
+    spark: SparkSession, events_path: str, checkpoint_dir: str | None = None
+) -> DataFrame:
+    """Run the daily-downsample aggregation as an availableNow stream and
+    return the materialized result (one row per (date, event_type))."""
+    configure(spark)
+    src = events_stream(spark, stage_landing(events_path, "landing_daily_"))
+    return _drain_to_memory(
+        _daily_avg(src), "daily_event_avg", "complete", checkpoint_dir
+    )
 
 
 def stream_daily_ingest(
@@ -209,7 +180,6 @@ def stream_daily_ingest(
     landing_path: str,
     out_path: str,
     checkpoint_dir: str,
-    watermark: str = "2 days",
 ) -> None:
     """Production shape: availableNow stream from the landing zone into
     a date-partitioned parquet sink. The nightly scheduler just re-runs
@@ -249,25 +219,15 @@ def stream_daily_ingest(
             "and mixing the two breaks parquet directory discovery. "
             "Point out_path (and checkpoint_dir) at a fresh location."
         )
-    src = events_stream(spark, landing_path)
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("_w"), F.col("event_type"))
-        .agg(F.round(F.avg("value") + 1e-9, 4).alias("avg_value"))
-        .select(
-            F.col("_w.start").cast("date").alias("date"), "event_type", "avg_value"
-        )
-    )
-    (
+    agg = _daily_avg(events_stream(spark, landing_path))
+    _drain(
         agg.writeStream.outputMode("append")
         .format("parquet")
         # date-partitioned so downstream date-range scans prune files
         .partitionBy("date")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("path", out_path),
+        checkpoint_dir,
+        partitions=None,
     )
 
 
@@ -286,8 +246,6 @@ def stream_enriched_daily(
     spark: SparkSession,
     events_path: str,
     checkpoint_dir: str | None = None,
-    watermark: str = "2 days",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static enrichment join: the event stream joins a static
     dimension (event_type → funnel stage) BEFORE the windowed
@@ -297,8 +255,6 @@ def stream_enriched_daily(
     downstream window aggregate is stateful).
     """
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_enrich_")
-    table = f"enriched_daily_{uuid.uuid4().hex[:8]}"
     stage_dim = F.broadcast(
         spark.createDataFrame(
             list(EVENT_STAGE_DIM), "event_type string, stage string"
@@ -308,7 +264,7 @@ def stream_enriched_daily(
         spark, stage_landing(events_path, "landing_enrich_")
     ).join(stage_dim, on="event_type", how="inner")
     agg = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day").alias("_w"), F.col("stage"))
         .agg(
             F.count("*").alias("n"),
@@ -320,40 +276,21 @@ def stream_enriched_daily(
             F.col("_w.start").cast("date").alias("date"), "stage", "n", "avg_value"
         )
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(table)
+    return _drain_to_memory(agg, "enriched_daily", "complete", checkpoint_dir)
 
 
-def stream_stream_click_error_join(
+def _click_error_join(
     spark: SparkSession,
     events_path: str,
-    window_seconds: int = 3600,
-    checkpoint_dir: str | None = None,
-    watermark: str = "1 hour",
-    state_partitions: int | None = 8,
+    window_seconds: int,
+    checkpoint_dir: str | None,
+    how: str,
 ) -> DataFrame:
-    """Stream-stream event-time interval join: each click joins the
-    same user's errors within [click, click + window] — two watermarked
-    streams, state bounded by the time-range predicate (Spark drops a
-    buffered row once the other side's watermark passes its join
-    window). The streaming twin of the batch range join (q42).
-
-    With availableNow over a finite landing directory every true pair
-    is emitted (watermarks bound STATE, not inner-join completeness),
-    so the batch interval-join SQL is an exact oracle.
-    """
+    """Each click joined to the same user's errors within
+    [click, click + window]: two streams under a 1-hour watermark, state
+    bounded by the time-range predicate (Spark drops a buffered row
+    once the other side's watermark passes its join window)."""
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_ssj_")
-    table = f"ssj_{uuid.uuid4().hex[:8]}"
     events_path = stage_landing(events_path, "landing_ssj_")
 
     def side(event_type: str, prefix: str):
@@ -365,7 +302,7 @@ def stream_stream_click_error_join(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("ts").alias(f"{prefix}_ts"),
             )
-            .withWatermark(f"{prefix}_ts", watermark)
+            .withWatermark(f"{prefix}_ts", "1 hour")
         )
 
     clicks = side("click", "c")
@@ -375,7 +312,7 @@ def stream_stream_click_error_join(
         (F.col("c_user") == F.col("e_user"))
         & (F.col("e_ts") >= F.col("c_ts"))
         & (F.col("e_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {window_seconds} SECONDS")),
-        "inner",
+        how,
     ).select(
         F.col("c_id").alias("click_id"),
         F.col("e_id").alias("error_id"),
@@ -384,17 +321,25 @@ def stream_stream_click_error_join(
             F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("c_ts"))
         ).alias("delta_us"),
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(table)
+    return _drain_to_memory(joined, f"ssj_{how}", "append", checkpoint_dir)
+
+
+def stream_stream_click_error_join(
+    spark: SparkSession,
+    events_path: str,
+    window_seconds: int = 3600,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Stream-stream event-time interval join (inner): the streaming
+    twin of the batch range join (q42).
+
+    With availableNow over a finite landing directory every true pair
+    is emitted (watermarks bound STATE, not inner-join completeness),
+    so the batch interval-join SQL is an exact oracle.
+    """
+    return _click_error_join(
+        spark, events_path, window_seconds, checkpoint_dir, "inner"
+    )
 
 
 def stream_stream_click_error_outer_join(
@@ -402,8 +347,6 @@ def stream_stream_click_error_outer_join(
     events_path: str,
     window_seconds: int = 3600,
     checkpoint_dir: str | None = None,
-    watermark: str = "1 hour",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the unmatched-click
     alerting shape on top of :func:`stream_stream_click_error_join`'s
@@ -414,7 +357,7 @@ def stream_stream_click_error_outer_join(
     end-of-batch-gated).
 
     Determinism over a finite availableNow landing: the final query
-    watermark is min(max click ts, max error ts) − delay, so the
+    watermark is min(max click ts, max error ts) − 1 hour, so the
     emitted outer set is exactly the clicks whose window closed
     strictly before it; clicks still in-window at end-of-input stay
     in state (they would resolve on the next incremental run). The
@@ -422,50 +365,6 @@ def stream_stream_click_error_outer_join(
     value parity pins Spark's eviction arithmetic, not just the
     happy path.
     """
-    configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_ssoj_")
-    table = f"ssoj_{uuid.uuid4().hex[:8]}"
-    events_path = stage_landing(events_path, "landing_ssoj_")
-
-    def side(event_type: str, prefix: str):
-        return (
-            events_stream(spark, events_path)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", watermark)
-        )
-
-    clicks = side("click", "c")
-    errors = side("error", "e")
-    joined = clicks.join(
-        errors,
-        (F.col("c_user") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("c_ts"))
-        & (
-            F.col("e_ts")
-            <= F.col("c_ts") + F.expr(f"INTERVAL {window_seconds} SECONDS")
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c_id").alias("click_id"),
-        F.col("e_id").alias("error_id"),
-        F.col("c_user").alias("user_id"),
-        (
-            F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("c_ts"))
-        ).alias("delta_us"),
+    return _click_error_join(
+        spark, events_path, window_seconds, checkpoint_dir, "leftOuter"
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(table)

@@ -12,28 +12,22 @@ state forever — deliberately not used.)
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import configure
-from .daily import events_stream, stage_landing, stream_shuffle_partitions
-from ..operators.util import scratch_dir
+from .daily import events_stream, stage_landing
+from .runner import _drain_to_memory
 
 
 def stream_dedup_events(
     spark: SparkSession,
     events_path: str,
-    watermark: str = "2 days",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """availableNow stream over the landing path, emitting each event_id
-    at most once per watermark window; returns the deduped rows."""
+    at most once per 2-day watermark window; returns the deduped rows."""
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_dedup_")
-    table = f"dedup_{uuid.uuid4().hex[:8]}"
     src = (
         events_stream(spark, stage_landing(events_path, "landing_dedup_"))
         .select(
@@ -43,28 +37,16 @@ def stream_dedup_events(
             "value",
             F.col("ts").alias("_et"),
         )
-        .withWatermark("_et", watermark)
+        .withWatermark("_et", "2 days")
     )
     deduped = src.dropDuplicatesWithinWatermark(["event_id"]).drop("_et")
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(table)
+    return _drain_to_memory(deduped, "dedup", "append", checkpoint_dir)
 
 
 def stream_srm_daily(
     spark: SparkSession,
     events_path: str,
-    watermark: str = "1 day",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming daily sample-ratio-mismatch guardrail — q295's A/B
     trust gate as an ALWAYS-ON monitor: exactly-once per-(day, user)
@@ -76,7 +58,7 @@ def stream_srm_daily(
     a day's row emits only once the watermark PROVES the day closed.
 
     Determinism over a finite availableNow landing (the q270
-    convention): the final watermark is max(ts) − delay, so the
+    convention): the final watermark is max(ts) − 1 day, so the
     emitted set is exactly the days whose window end ≤ that cutoff —
     the batch oracle reproduces the dedup, the split, the χ², AND the
     cutoff rule, pinning Spark's eviction arithmetic.
@@ -86,30 +68,18 @@ def stream_srm_daily(
     from ..operators.sampling import hash_bucket
 
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_srm_")
-    table = f"srm_{uuid.uuid4().hex[:8]}"
     src = events_stream(spark, stage_landing(events_path, "landing_srm_"))
     units = (
         src.select("ts", F.col("user_id").alias("u"))
         .withColumn("_day", F.to_date("ts"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["_day", "u"])
     )
     counts = units.groupBy(
         F.window("ts", "1 day").alias("_w"),
         (hash_bucket(F.col("u"), 2) == 0).alias("_is_a"),
     ).agg(F.count("*").cast("long").alias("_n"))
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            counts.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    emitted = spark.table(table)
+    emitted = _drain_to_memory(counts, "srm", "append", checkpoint_dir)
     agg = emitted.groupBy(
         F.date_format(F.col("_w.start"), "yyyy-MM-dd").alias("day")
     ).agg(
@@ -137,9 +107,7 @@ def stream_heavy_hitters(
     spark: SparkSession,
     events_path: str,
     k: int = 3,
-    watermark: str = "1 day",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming per-day top-k heavy hitters: watermark-gated 1-day
     window counts per event_type (append mode — a day's counts emit
@@ -151,7 +119,7 @@ def stream_heavy_hitters(
 
     Determinism over a finite availableNow landing (the q270/q303
     convention): emitted days are exactly those whose window end ≤
-    max(ts) − watermark; the batch oracle reproduces the counts, the
+    max(ts) − 1 day; the batch oracle reproduces the counts, the
     rank, AND that cutoff rule. The rank window partitions by day —
     per-key, never a data-shaped single partition.
 
@@ -160,26 +128,14 @@ def stream_heavy_hitters(
     from pyspark.sql import Window
 
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_hh_")
-    table = f"hh_{uuid.uuid4().hex[:8]}"
     src = events_stream(spark, stage_landing(events_path, "landing_hh_"))
     counts = (
         src.select("ts", "event_type")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("_w"), "event_type")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            counts.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    emitted = spark.table(table).select(
+    emitted = _drain_to_memory(counts, "hh", "append", checkpoint_dir).select(
         F.date_format(F.col("_w.start"), "yyyy-MM-dd").alias("day"),
         "event_type",
         "n",

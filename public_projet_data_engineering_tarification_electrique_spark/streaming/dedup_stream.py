@@ -23,44 +23,26 @@ output contract stays deterministic and oracle-checkable.
 
 from __future__ import annotations
 
-import contextlib
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.util import scratch_dir
 from ..session import configure
-from .daily import stream_shuffle_partitions
+from .runner import _drain
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
-#: RocksDB state store for the dedup streams — same pin stateful.py
-#: applies for transformWithState: the seen-fingerprint set is the
-#: whole state, and at crawl scale it must spill + checkpoint
-#: incrementally instead of living on the executor heap (HDFS-backed
-#: provider keeps the full map in memory).
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-@contextlib.contextmanager
-def _rocksdb_state_store(spark: SparkSession):
-    """Scope the RocksDB provider to one stream start (the conf is
-    read at query start); restore so concurrently-defined HDFS-backed
-    checkpoints are untouched."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+#: Landing slice count: each slice is one micro-batch, and every
+#: micro-batch pays a FIXED trigger cost (planning + state-store commit
+#: + sink round-trip) that is independent of data volume — at bench SFs
+#: this fixed tail dominates the streams' wall-clock (8 slices measured
+#: 6.8 s for q230 at sf0.001; the data itself is milliseconds). The
+#: results are slice-count invariant by construction (the oracles are
+#: COUNT(DISTINCT)-style set functions of the corpus); ≥3 keeps the
+#: stateful operator genuinely exercising CROSS-batch state (tests
+#: stage 3 files and pin state crossing), anything above that only buys
+#: more trigger overhead.
+STREAM_SLICES = 4
 
 
 def normalized_prefix_key(text_col: str = "text", prefix_len: int = 40) -> Column:
@@ -71,63 +53,52 @@ def normalized_prefix_key(text_col: str = "text", prefix_len: int = 40) -> Colum
     return F.md5(F.substring(norm, 1, prefix_len))
 
 
-def default_stream_slices() -> int:
-    """Landing slice count for the availableNow streaming demos.
-
-    Each slice is one micro-batch, and every micro-batch pays a FIXED
-    trigger cost (planning + state-store commit + sink round-trip)
-    that is independent of data volume — at bench SFs this fixed tail
-    dominates the streaming family's wall-clock (8 slices measured
-    6.8 s for q230 at sf0.001; the data itself is milliseconds). The
-    results are slice-count invariant by construction (the oracles
-    are COUNT(DISTINCT)-style set functions of the corpus), so the
-    count is a pure cost knob: ≥3 keeps the stateful operator
-    genuinely exercising CROSS-batch state (tests stage 3 files and
-    pin state crossing), anything above that only buys more trigger
-    overhead. Env: SPARK_GRAFT_STREAM_SLICES, default 4, floor 3.
-    """
-    try:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_SLICES", "4"))
-    except ValueError:
-        n = 4
-    return max(3, n)
+def _staged_docs(
+    spark: SparkSession,
+    documents_path: str,
+    n_files: int,
+    landing_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(batch corpus, stream over it): the corpus is staged into
+    ``n_files`` doc_id-ranged landing files (unless ``landing_dir`` is
+    pre-staged) and streamed one file per trigger, so the dedup state
+    is genuinely exercised ACROSS micro-batches (a single-file landing
+    would make the stateful operator degenerate to a within-batch
+    distinct)."""
+    if n_files < 1:
+        raise ValueError(f"n_files must be >= 1, got {n_files}")
+    configure(spark)
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(documents_path)
+    landing = landing_dir
+    if landing is None:
+        landing = scratch_dir("dedup_landing_")
+        docs.repartitionByRange(n_files, "doc_id").write.mode(
+            "overwrite"
+        ).parquet(landing)
+    stream = (
+        spark.readStream.schema(DOCS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    return docs, stream
 
 
 def stream_prefix_dedup(
     spark: SparkSession,
     documents_path: str,
     prefix_len: int = 40,
-    n_files: int | None = None,
-    state_partitions: int | None = 8,
+    n_files: int = STREAM_SLICES,
 ) -> DataFrame:
     """Run the arrival-order dedup stream to completion (availableNow)
     and return one row (n_docs, n_kept, n_dropped).
 
-    The corpus is staged into ``n_files`` doc_id-ranged landing files
-    and streamed one file per trigger, so the dedup state is genuinely
-    exercised ACROSS micro-batches (a single-file landing would make
-    the stateful operator degenerate to a within-batch distinct).
     n_kept = |distinct NON-NULL fingerprints| exactly, whatever the
-    slicing — the oracle is a plain COUNT(DISTINCT …) over the same
-    table (which ignores NULLs, matching the NULL-text convention
-    documented on the dedup filter below).
+    slicing (see :func:`_staged_docs`) — the oracle is a plain
+    COUNT(DISTINCT …) over the same table (which ignores NULLs,
+    matching the NULL-text convention documented on the dedup filter
+    below).
     """
-    if n_files is None:
-        n_files = default_stream_slices()
-    if n_files < 1:
-        raise ValueError(f"n_files must be >= 1, got {n_files}")
-    configure(spark)
-    docs = spark.read.schema(DOCS_SCHEMA).parquet(documents_path)
-
-    landing = scratch_dir("dedup_landing_")
-    docs.repartitionByRange(n_files, "doc_id").write.mode("overwrite").parquet(
-        landing
-    )
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    docs, stream = _staged_docs(spark, documents_path, n_files)
     # NULL-text rows hash to a NULL fingerprint. dropDuplicates would
     # KEEP one null-fp row (NULL is its own dedup key to Spark), but
     # the documented oracle — COUNT(DISTINCT md5(...)) — ignores NULLs,
@@ -139,32 +110,26 @@ def stream_prefix_dedup(
         .filter(F.col("fp").isNotNull())
         .dropDuplicates(["fp"])
     )
-    return _run_and_count(spark, docs, deduped, state_partitions)
+    return _run_and_count(spark, docs, deduped)
 
 
 def _run_and_count(
-    spark: SparkSession,
-    docs: DataFrame,
-    deduped: DataFrame,
-    state_partitions: int | None,
+    spark: SparkSession, docs: DataFrame, deduped: DataFrame
 ) -> DataFrame:
     """Run the dedup stream to completion (availableNow, RocksDB state
     store) emitting only fingerprints, then fold the emitted set and
     the batch corpus into the one-row (n_docs, n_kept, n_dropped)."""
     emitted = scratch_dir("dedup_emitted_")
-    ckpt = scratch_dir("dedup_ckpt_")
-    with stream_shuffle_partitions(spark, state_partitions), \
-            _rocksdb_state_store(spark):
-        (
-            deduped.select("fp")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", emitted)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    # RocksDB: the seen-fingerprint set is the whole state, and at crawl
+    # scale it must spill + checkpoint incrementally
+    _drain(
+        deduped.select("fp")
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", emitted),
+        None,
+        rocksdb=True,
+    )
     kept = spark.read.schema("fp string").parquet(emitted)
     return (
         kept.agg(F.count("*").cast("long").alias("n_kept"))
@@ -182,8 +147,7 @@ def stream_prefix_dedup_watermarked(
     documents_path: str,
     delay_seconds: int = 10_000_000,
     prefix_len: int = 40,
-    n_files: int | None = None,
-    state_partitions: int | None = 8,
+    n_files: int = STREAM_SLICES,
     landing_dir: str | None = None,
 ) -> DataFrame:
     """The BOUNDED-STATE sibling of :func:`stream_prefix_dedup`:
@@ -210,26 +174,9 @@ def stream_prefix_dedup_watermarked(
     control batch boundaries exactly); default stages ``n_files``
     doc_id-ranged files like q230.
     """
-    if n_files is None:
-        n_files = default_stream_slices()
-    if n_files < 1:
-        raise ValueError(f"n_files must be >= 1, got {n_files}")
     if delay_seconds < 1:
         raise ValueError(f"delay_seconds must be >= 1, got {delay_seconds}")
-    configure(spark)
-    docs = spark.read.schema(DOCS_SCHEMA).parquet(documents_path)
-
-    landing = landing_dir
-    if landing is None:
-        landing = scratch_dir("dedup_wm_landing_")
-        docs.repartitionByRange(n_files, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    docs, stream = _staged_docs(spark, documents_path, n_files, landing_dir)
     # NULL-fp convention as in stream_prefix_dedup; NULL doc_id rows
     # carry no event time and are likewise never "kept". Event time is
     # offset one day past the epoch: the initial watermark is epoch 0,
@@ -245,4 +192,4 @@ def stream_prefix_dedup_watermarked(
         .withWatermark("_ts", f"{int(delay_seconds)} seconds")
         .dropDuplicatesWithinWatermark(["fp"])
     )
-    return _run_and_count(spark, docs, deduped, state_partitions)
+    return _run_and_count(spark, docs, deduped)

@@ -15,13 +15,11 @@ EXACT oracle for the stream.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.pricing import score_requests_with_status
 from ..session import configure
-from ..operators.util import scratch_dir
+from .runner import _drain_to_memory
 
 #: declared landing schema for request files (schema inference on a
 #: stream source is banned — same discipline as sources.readers)
@@ -49,13 +47,11 @@ def stream_score_requests(
     region-/commune-grain and broadcasts, so the stream side never
     shuffles — per micro-batch the plan is scan → BHJ ×2 → project,
     identical to the batch scorer's shape. Because there is no shuffle
-    and no state store, this query takes no state_partitions knob (the
-    stateful siblings' pinned-partition machinery has nothing to size
+    and no state store, the stream runs with the session's shuffle
+    partitions (the stateful siblings' pinned count has nothing to size
     here).
     """
     configure(spark)
-    checkpoint = checkpoint_dir or scratch_dir("ckpt_serve_")
-    table = f"served_{uuid.uuid4().hex[:8]}"
     src = (
         spark.readStream.schema(REQUESTS_LANDING_SCHEMA)
         .format("parquet")
@@ -64,13 +60,6 @@ def stream_score_requests(
     scored = score_requests_with_status(
         src, daily, annual, run_date, year_n
     ).select("code_commune", "status", "price")
-    (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return _drain_to_memory(
+        scored, "served", "append", checkpoint_dir, partitions=None
     )
-    return spark.table(table)

@@ -39,8 +39,8 @@ from .daily import (
     events_stream,
     stage_landing,
     stage_landing_under_checkpoint,
-    stream_shuffle_partitions,
 )
+from .runner import _drain_to_batch_log
 from ..operators.util import hadoop_fs, scratch_dir
 
 OUTPUT_SCHEMA = (
@@ -322,18 +322,17 @@ def stream_sessionize(
     spark: SparkSession,
     events_path: str,
     gap_seconds: int = 1800,
-    watermark: str = "0 seconds",
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 8,
     n_buckets: int = 32,
 ) -> DataFrame:
     """Run gap-sessionization as an availableNow stateful stream over a
     parquet landing path; returns the emitted (closed) sessions.
 
-    With ``availableNow`` the final watermark is the max event time
-    minus ``watermark``, so sessions still open at end-of-input stay in
-    state (they would resume on the next incremental run) — callers
-    comparing against the batch twin should compare the closed prefix.
+    With ``availableNow`` the final watermark is the max event time (the
+    watermark has zero delay), so sessions still open at end-of-input
+    stay in state (they would resume on the next incremental run) —
+    callers comparing against the batch twin should compare the closed
+    prefix.
 
     State is keyed by a ``n_buckets``-way hash of the user (see
     :data:`BUCKET_STATE_SCHEMA`): per-user state rides arrays inside
@@ -349,11 +348,9 @@ def stream_sessionize(
     # Durable emission sink UNDER the checkpoint: the memory sink
     # cannot recover from a checkpoint ("This query does not support
     # recovering..."), so the advertised incremental resume only works
-    # with a restartable sink. foreachBatch overwrites each batch's
-    # closed sessions into its own batch=<bid> subdir (idempotent under
-    # at-least-once replay); the return value reads ALL sessions
-    # emitted so far for this checkpoint (cumulative — identical to the
-    # single-run view for a fresh checkpoint).
+    # with a restartable sink: the runner's per-batch log, read back
+    # cumulatively (ALL sessions emitted so far for this checkpoint —
+    # identical to the single-run view for a fresh checkpoint).
     emitted_dir = os.path.join(checkpoint, "emitted")
     # One-time migration of a legacy flat layout: builds before the
     # batch=<bid> scheme appended part files directly under emitted/;
@@ -413,7 +410,7 @@ def stream_sessionize(
             F.expr("unix_micros(ts) DIV 1000000").alias("ts_s"),
             F.col("ts").alias("_et"),
         )
-        .withWatermark("_et", watermark)
+        .withWatermark("_et", "0 seconds")
     )
     # xxhash64 skips NULL inputs and returns its seed (42), so NULL users
     # land in bucket pmod(42, n_buckets) beside real users (the coalesce
@@ -433,32 +430,6 @@ def stream_sessionize(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    # Per-batch OVERWRITE into emitted/batch=<bid>: foreachBatch is
-    # at-least-once on crash replay (the batch can re-run after its
-    # output landed but before the commit log recorded it) — a plain
-    # mode("append") would duplicate that batch's closed sessions on
-    # resume. Overwriting the batch's own directory makes the replay
-    # idempotent; committed batches are never re-executed, so earlier
-    # directories are untouched.
-    def _emit(batch: DataFrame, bid: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(emitted_dir, f"batch={bid}")
-        )
-
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            sessions.writeStream.outputMode("append")
-            .foreachBatch(_emit)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    # Hadoop FS probe, NOT os.path: on a non-local checkpoint an
-    # os.path.isdir is always False and would silently return an empty
-    # frame, dropping every emitted session.
-    if not fs.exists(emitted_hpath):
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    # partition discovery appends the batch=<bid> dir as a column even
-    # under an explicit schema — drop it, it's sink bookkeeping
-    return spark.read.schema(OUTPUT_SCHEMA).parquet(emitted_dir).drop("batch")
+    return _drain_to_batch_log(
+        sessions, "append", emitted_dir, OUTPUT_SCHEMA, checkpoint
+    )

@@ -37,7 +37,6 @@ shuffle, amortized over the stream's life.
 from __future__ import annotations
 
 import importlib.util
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -45,19 +44,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.util import hadoop_fs, scratch_dir
-from .daily import (
-    events_stream,
-    stage_landing,
-    stream_shuffle_partitions,
-)
+from ..operators.util import scratch_dir
+from .daily import events_stream, stage_landing
+from .runner import _drain_to_batch_log
 
 OUTPUT_SCHEMA = "user_id long, n_events long, value_e2 long"
 _STATE_SCHEMA = "n long, s long"
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
 
 
 def tws_available() -> bool:
@@ -190,68 +182,25 @@ def _apws_totals(src: DataFrame, n_buckets: int = 32) -> DataFrame:
     )
 
 
-def running_user_totals(
-    spark: SparkSession,
-    events_path: str,
-    state_partitions: int = 8,
-) -> DataFrame:
+def running_user_totals(spark: SparkSession, events_path: str) -> DataFrame:
     """Run the running-totals stream to completion (availableNow) and
     return the final per-user totals.
 
-    Emitted rows land per-batch under `emitted/batch=<bid>` (overwrite
-    — idempotent under foreachBatch's at-least-once replay, same
-    discipline as streaming.sessions). The final value per user is the
-    row with the max n_events over the emitted log (a max(struct)
-    argmax — n_events is monotone even when value totals are not, so
-    the collapse is exact whatever the micro-batch slicing was).
+    Emitted rows land in the runner's per-batch log. The final value
+    per user is the row with the max n_events over that log (a
+    max(struct) argmax — n_events is monotone even when value totals
+    are not, so the collapse is exact whatever the micro-batch slicing
+    was).
     """
     use_tws = tws_available()
     src = _source(spark, events_path)
     out = _tws_totals(src) if use_tws else _apws_totals(src)
 
-    emitted = scratch_dir("tws_emitted_")
-    checkpoint = scratch_dir("tws_ckpt_")
-
-    def _emit(batch: DataFrame, bid: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(emitted, f"batch={bid}")
-        )
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    # TWS requires the RocksDB provider
+    log = _drain_to_batch_log(
+        out, "update", scratch_dir("tws_emitted_"), OUTPUT_SCHEMA,
+        rocksdb=use_tws,
     )
-    try:
-        if use_tws:
-            # TWS requires the RocksDB provider; scope the conf to this
-            # stream's start (it is read at query start) and restore so
-            # concurrently-defined HDFS-backed checkpoints are untouched.
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _ROCKSDB
-            )
-        with stream_shuffle_partitions(spark, state_partitions):
-            (
-                out.writeStream.outputMode("update")
-                .foreachBatch(_emit)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    prev_provider,
-                )
-    fs, emitted_hpath = hadoop_fs(spark, emitted)
-    if not fs.exists(emitted_hpath):
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
-    log = spark.read.schema(OUTPUT_SCHEMA).parquet(emitted).drop("batch")
     # Collapse the update-mode log to each user's LATEST emitted row —
     # the row with the max n_events — via one max(struct) argmax.
     # Independent max() per column would be wrong for value_e2 as soon

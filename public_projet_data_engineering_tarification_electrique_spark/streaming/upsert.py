@@ -27,8 +27,8 @@ from .daily import (
     events_stream,
     stage_landing,
     stage_landing_under_checkpoint,
-    stream_shuffle_partitions,
 )
+from .runner import _drain
 from ..operators.util import hadoop_fs, scratch_dir
 
 STATE_SCHEMA = (
@@ -123,7 +123,6 @@ def stream_upsert_latest(
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
     n_buckets: int = 8,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Maintain each user's LATEST event as a streamed keyed upsert.
 
@@ -175,19 +174,14 @@ def stream_upsert_latest(
             F.unix_micros(F.col("_m.ts")).alias("last_ts_us"),
         )
     )
-    with stream_shuffle_partitions(spark, state_partitions):
-        (
-            latest.writeStream.outputMode("update")
-            .foreachBatch(
-                lambda batch, _bid: _merge_batch(
-                    batch.sparkSession, batch, state, n_buckets
-                )
+    _drain(
+        latest.writeStream.outputMode("update").foreachBatch(
+            lambda batch, _bid: _merge_batch(
+                batch.sparkSession, batch, state, n_buckets
             )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        ),
+        checkpoint,
+    )
     # Empty landing + fresh checkpoint → no micro-batch ever fired and
     # no state dir exists: the documented production shape (the stream
     # starts before the first nightly file lands) must return an empty

@@ -267,7 +267,6 @@ def test_dedup_clusters_transitive(spark):
 
 def test_hash_split_deterministic_and_partition_invariant(spark):
     from public_projet_data_engineering_tarification_electrique_spark.operators.sampling import (
-        deterministic_sample,
         hash_split,
     )
 
@@ -283,13 +282,6 @@ def test_hash_split_deterministic_and_partition_invariant(spark):
     # different salt ⇒ a different (uncorrelated) assignment
     c = {r.doc_id: r.split for r in hash_split(docs, "doc_id", salt="v2").collect()}
     assert a != c
-    # deterministic sample: stable subset, ~fraction sized
-    s1 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1).collect()}
-    s2 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1).collect()}
-    assert s1 == s2 and 100 < len(s1) < 300
-    # monotone: enlarging the fraction only ADDS rows
-    s3 = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.2).collect()}
-    assert s1 <= s3
 
 
 def test_stratified_sample_rates_and_nesting(spark):
@@ -649,33 +641,6 @@ def test_anchored_neardup_survives_sparse_id_space(spark):
         ).collect()
     }
     assert (3, 200_001) in pairs
-
-
-def test_native_minhash_candidates_full_recall(spark):
-    """The MLlib-free MinHash candidate generator must contain every
-    exact-Jaccard pair at the gate threshold (r=1 banding: per-table
-    collision prob = j, OR-amplified over 16 tables)."""
-    from public_projet_data_engineering_tarification_electrique_spark.operators.dedup import (
-        minhash_candidates_native,
-        ngram_jaccard_pairs,
-    )
-    from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
-        load_table,
-    )
-    from .conftest import SF_ORACLE
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    native = {
-        (r.id_a, r.id_b)
-        for r in minhash_candidates_native(docs, num_hash_tables=16).collect()
-    }
-    exact = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(
-            docs, k=3, threshold=0.5, max_df=None
-        ).collect()
-    }
-    assert exact <= native
 
 
 def test_anchored_neardup_tiny_input_never_empty_codebook(spark):

@@ -44,6 +44,8 @@ def test_scan_shaped_classifier(spark):
     assert _scan_shaped(scan.select("o_orderkey"))
     assert _scan_shaped(scan.filter(F.col("o_orderkey") > 0))
     assert not _scan_shaped(scan.repartition(4))
+    assert not _scan_shaped(scan.repartition(4, "o_orderkey"))
+    assert not _scan_shaped(scan.repartitionByRange(4, "o_orderkey"))
     assert not _scan_shaped(scan.limit(5))
     assert not _scan_shaped(scan.select("o_orderkey").distinct())
     assert not _scan_shaped(scan.union(scan))

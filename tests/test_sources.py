@@ -234,27 +234,6 @@ def test_anchored_neardup_plan_construction_launches_no_job(spark):
     assert df.columns == ["id_a", "id_b", "sim"]
 
 
-def test_compact_parquet_reduces_files_losslessly(spark, tmp_path):
-    """Small-file compaction: 40 tiny files in, ~1 file out, content
-    identical (the maintenance job streaming sinks rely on)."""
-    import glob
-
-    from public_projet_data_engineering_tarification_electrique_spark.sources.writers import (
-        compact_parquet,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    df = spark.range(4000).withColumn("v", F.col("id") * 2)
-    df.repartition(40).write.parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 40
-    n = compact_parquet(spark, src, dst, target_file_bytes=64 * 1024 * 1024)
-    assert n == 1
-    assert len(glob.glob(f"{dst}/*.parquet")) == 1
-    back = spark.read.parquet(dst)
-    assert back.count() == 4000
-    assert back.agg(F.sum("v")).head()[0] == df.agg(F.sum("v")).head()[0]
-
-
 def test_python_datasource_partition_parallel(spark):
     """Spark 4 Python DataSource (sources/pyds.py): one input split per
     API page — the scan's partition count equals the page count, and
