@@ -433,7 +433,7 @@ def connected_components(
     unchanged; the threshold only ever moves work driver-side when the
     graph provably fits.
     """
-    from .util import pinned_shuffle_partitions
+    from .util import scoped_conf
 
     # The edge list materializes under the SESSION partitioning (its
     # upstream — shingling, similarity scoring — is corpus-sized work);
@@ -465,7 +465,9 @@ def connected_components(
         n_edges = sym.count()
         if n_edges <= local_threshold:
             return _local_union_find(sym)
-    with pinned_shuffle_partitions(edges.sparkSession, loop_partitions):
+    with scoped_conf(
+        edges.sparkSession, "spark.sql.shuffle.partitions", loop_partitions
+    ):
         comp = (
             sym.select(F.col("_a").alias("node"))
             .distinct()
@@ -540,7 +542,7 @@ def connected_components_star(
 
     Output: (node, component) where component = min node id reachable.
     """
-    from .util import pinned_shuffle_partitions
+    from .util import scoped_conf
 
     def _canon(e: DataFrame) -> DataFrame:
         # undirected edge as (hi, lo), self-loops dropped
@@ -564,7 +566,9 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     cur = _canon(raw).localCheckpoint(eager=True)
-    with pinned_shuffle_partitions(edges.sparkSession, loop_partitions):
+    with scoped_conf(
+        edges.sparkSession, "spark.sql.shuffle.partitions", loop_partitions
+    ):
         prev_sig: tuple[int, int] | None = None
         for _ in range(max_iter):
             # -- large-star --------------------------------------------

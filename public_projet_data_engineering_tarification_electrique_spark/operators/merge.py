@@ -6,10 +6,12 @@ SURVEY §2.9 flags the idempotency gap; partition-overwrite backfill
 (q118) covers whole-partition replacement, this covers KEYED upsert
 with the full WHEN MATCHED / NOT MATCHED / DELETE clause set).
 
-Two layers, mirroring streaming/upsert.py:
+One full-outer join on the merge key (:func:`_merge_join`) and the
+clause projections over it (:class:`MergeProjections`) serve every
+surface:
 
-- :func:`merge_into` — the PLAN: one full-outer join on the merge key
-  plus CASE projections implementing
+- :func:`merge_into` — the PLAN: the join plus CASE projections
+  implementing
   ``WHEN MATCHED [AND cond] THEN DELETE``,
   ``WHEN MATCHED THEN UPDATE SET ...``,
   ``WHEN NOT MATCHED [AND cond] THEN INSERT``.
@@ -17,13 +19,15 @@ Two layers, mirroring streaming/upsert.py:
   SQL-expressible and oracle-checkable, and Catalyst is free to pick
   the physical join (AQE broadcasts a small CDC batch against a large
   target; at 100 TB both sides bucket-partition on the key and the
-  join is co-located).
+  join is co-located). :func:`merge_changes` projects the same join
+  to its change data feed.
 
 - :func:`merge_write` — the SINK: applies the merge against a
   bucket-partitioned parquet state dir and rewrites ONLY the buckets
   the source touches (static isin pruning from a ≤ n_buckets driver
   list + dynamic partition overwrite — the batch twin of
-  streaming/upsert._merge_batch). The merge is a pure function of
+  streaming/upsert._merge_batch), optionally appending the batch's
+  change data feed from the same join. The merge is a pure function of
   (state, batch), so a replay is idempotent exactly when the
   ``update_set`` is last-write-wins (columns taken from the source);
   an ADDITIVE update expression (e.g. ``n + src("n")``) re-applies on
@@ -48,27 +52,6 @@ def src(col: str) -> Column:
     expression or condition (target columns are referenced by their
     plain name)."""
     return F.col(_SRC + col)
-
-
-def _validated_update_set(
-    target_cols: list[str],
-    source_cols: list[str],
-    keys: list[str],
-    update_set: dict[str, Column] | None,
-) -> dict[str, Column]:
-    """Shared clause validation for the merge family (same error
-    surface as always; factored so the plan, the changelog, and the
-    fused sink validate identically)."""
-    if not keys:
-        raise ValueError("keys must be non-empty")
-    missing = [c for c in target_cols if c not in source_cols]
-    if missing:
-        raise ValueError(f"source lacks target columns: {missing}")
-    update_set = dict(update_set or {})
-    unknown = [c for c in update_set if c not in target_cols or c in keys]
-    if unknown:
-        raise ValueError(f"update_set targets non-value columns: {unknown}")
-    return update_set
 
 
 def _merge_join(
@@ -100,9 +83,10 @@ class MergeProjections:
     q241 CDC micro-batch (measured r13) — at ANY data scale.
 
     Build once per stream (source/target schemas fixed by the stream's
-    contract), pass to :func:`merge_write_cdf`; the one-shot callers
+    contract), pass to :func:`merge_write`; the one-shot callers
     (:func:`merge_into`, :func:`merge_changes`) build it inline, so
-    clause semantics live in exactly one place either way.
+    clause semantics — and their validation — live in exactly one
+    place either way.
     """
 
     def __init__(
@@ -115,12 +99,21 @@ class MergeProjections:
         insert_when: Column | None,
         include_preimages: bool = True,
     ) -> None:
-        update_set = _validated_update_set(
-            list(state_cols), list(source_cols), list(keys), update_set
-        )
         self.state_cols = list(state_cols)
         self.keys = list(keys)
         self.include_preimages = include_preimages
+        if not self.keys:
+            raise ValueError("keys must be non-empty")
+        missing = [c for c in self.state_cols if c not in source_cols]
+        if missing:
+            raise ValueError(f"source lacks target columns: {missing}")
+        update_set = dict(update_set or {})
+        unknown = [
+            c for c in update_set
+            if c not in self.state_cols or c in self.keys
+        ]
+        if unknown:
+            raise ValueError(f"update_set targets non-value columns: {unknown}")
 
         matched = (
             F.col("_t_present").isNotNull() & F.col("_s_present").isNotNull()
@@ -205,44 +198,6 @@ class MergeProjections:
         return out.unionByName(pre)
 
 
-def _into_projection(
-    joined: DataFrame,
-    target_cols: list[str],
-    keys: list[str],
-    update_set: dict[str, Column],
-    delete_when: Column | None,
-    insert_when: Column | None,
-) -> DataFrame:
-    """merge_into's clause semantics as a pure projection of the
-    :func:`_merge_join` frame (so a caller holding a materialized
-    joined frame can derive the post-merge state without re-joining).
-    One-shot convenience over :class:`MergeProjections`; update_set
-    must already be validated (it is re-validated trivially here via
-    the shared constructor against target columns)."""
-    return MergeProjections(
-        target_cols, list(target_cols), keys, update_set,
-        delete_when, insert_when,
-    ).into(joined)
-
-
-def _changes_projection(
-    joined: DataFrame,
-    target_cols: list[str],
-    keys: list[str],
-    update_set: dict[str, Column],
-    delete_when: Column | None,
-    insert_when: Column | None,
-    include_preimages: bool,
-) -> DataFrame:
-    """merge_changes's CDF row set as a pure projection of the
-    :func:`_merge_join` frame — same sharing rationale as
-    :func:`_into_projection`."""
-    return MergeProjections(
-        target_cols, list(target_cols), keys, update_set,
-        delete_when, insert_when, include_preimages,
-    ).changes(joined)
-
-
 def merge_into(
     target: DataFrame,
     source: DataFrame,
@@ -275,13 +230,10 @@ def merge_into(
     a NULL-key source row is treated as not-matched even if a NULL-key
     target row exists.
     """
-    update_set = _validated_update_set(
-        target.columns, source.columns, keys, update_set
-    )
-    joined = _merge_join(target, source, keys)
-    return _into_projection(
-        joined, target.columns, keys, update_set, delete_when, insert_when
-    )
+    return MergeProjections(
+        target.columns, source.columns, keys, update_set, delete_when,
+        insert_when,
+    ).into(_merge_join(target, source, keys))
 
 
 def merge_changes(
@@ -320,19 +272,10 @@ def merge_changes(
     table. Plan shape: the same single full-outer join, one CASE
     projection; Catalyst/AQE treat it exactly like merge_into.
     """
-    update_set = _validated_update_set(
-        target.columns, source.columns, keys, update_set
-    )
-    joined = _merge_join(target, source, keys)
-    return _changes_projection(
-        joined,
-        target.columns,
-        keys,
-        update_set,
-        delete_when,
-        insert_when,
-        include_preimages,
-    )
+    return MergeProjections(
+        target.columns, source.columns, keys, update_set, delete_when,
+        insert_when, include_preimages,
+    ).changes(_merge_join(target, source, keys))
 
 def apply_changes(
     state: DataFrame,
@@ -378,6 +321,8 @@ def merge_write(
     delete_when: Column | None = None,
     insert_when: Column | None = None,
     batch_id: int | None = None,
+    changelog_dir: str | None = None,
+    projections: MergeProjections | None = None,
 ) -> bool:
     """Apply one MERGE batch to a bucket-partitioned parquet state dir,
     rewriting only the buckets the source touches. Returns True if the
@@ -397,13 +342,27 @@ def merge_write(
     batch_id=None keeps the unledgered behavior (correct for
     last-write-wins merges, which are naturally idempotent).
 
+    ``changelog_dir`` also appends the batch's Delta-CDF row set — the
+    :func:`merge_changes` rows with pre-images, tagged ``_batch_id``
+    when a ``batch_id`` is given — computed against the PRE-merge state
+    from the same join. The ledger skip guards that append too, so a
+    replay cannot double-feed downstream consumers.
+
+    ``projections``: the prebuilt :class:`MergeProjections` for this
+    (state schema, source schema, clauses); when given it replaces
+    ``update_set``/``delete_when``/``insert_when``. Per-batch loops
+    build it once — rebuilding the expression trees per micro-batch
+    costs ~0.6 s of driver-side Py4J work at any data size (measured
+    r13 on q241).
+
     Bucket = pmod(xxhash64(keys), n_buckets) — stable across runs, so
     a key always lives in the same file group and the per-batch scan
     is O(affected buckets), not O(table). ``state_schema`` is the DDL
     of the state WITHOUT the ``_bucket`` column (declared schema read,
-    never inference — same discipline as streaming/upsert). The layout
-    is self-describing: the first write persists (n_buckets, keys,
-    hash fn) to a ``_bucket_layout.json`` marker and every later batch
+    never inference — same discipline as streaming/upsert); an empty
+    frame of it stands in for a fresh state. The layout is
+    self-describing: the first write persists (n_buckets, keys, hash
+    fn) to a ``_bucket_layout.json`` marker and every later batch
     asserts against it — re-running with a different n_buckets raises
     instead of silently mis-pruning.
     """
@@ -411,171 +370,7 @@ def merge_write(
         bucket_layout_guard,
         hadoop_fs,
         read_json_marker,
-        write_json_marker,
-    )
-
-    if batch_id is not None:
-        ledger = read_json_marker(spark, state_dir, "_merge_ledger.json")
-        if ledger is not None and batch_id <= ledger["last_batch_id"]:
-            return False  # already-applied replay
-
-    commit_layout = bucket_layout_guard(
-        spark,
-        state_dir,
-        {
-            "n_buckets": int(n_buckets),
-            "keys": list(keys),
-            "hash": "pmod(xxhash64(keys), n_buckets)",
-        },
-    )
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast(
-        "int"
-    )
-    new = source.withColumn("_bucket", bucket).persist()
-    try:
-        fs, hpath = hadoop_fs(spark, state_dir)
-        affected: list[int] = []
-        if fs.exists(hpath):
-            affected = [
-                r["_bucket"] for r in new.select("_bucket").distinct().collect()
-            ]
-            old = (
-                spark.read.schema(state_schema + ", _bucket int")
-                .parquet(state_dir)
-                .filter(F.col("_bucket").isin(affected))
-            )
-            merged = merge_into(
-                old,
-                new,
-                keys=keys,
-                update_set=update_set,
-                delete_when=delete_when,
-                insert_when=insert_when,
-            )
-        else:
-            # fresh state: insert-only path. insert_when references
-            # source columns via src() — rename, filter, project down
-            # to the declared state columns (+ _bucket).
-            state_cols = spark.createDataFrame([], state_schema).columns
-            ins = new.select(
-                *[F.col(k) for k in keys],
-                *[
-                    F.col(c).alias(_SRC + c)
-                    for c in new.columns
-                    if c not in keys
-                ],
-            )
-            if insert_when is not None:
-                ins = ins.filter(F.coalesce(insert_when, F.lit(False)))
-            merged = ins.select(
-                *[
-                    F.col(c if c in keys else _SRC + c).alias(c)
-                    for c in state_cols
-                ],
-                F.col(_SRC + "_bucket").alias("_bucket"),
-            )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # Cluster on _bucket before the write: a partitionBy write
-            # emits one file per (task, bucket) pair, so an unclustered
-            # P-partition frame sprays up to P small files into EVERY
-            # rewritten bucket dir — the small-files decay that kills
-            # scan/list performance on big state tables. One shuffle of
-            # the (bucket-count-sized) merge output keeps each bucket
-            # at one file per rewrite (set
-            # spark.sql.files.maxRecordsPerFile to re-split buckets
-            # that outgrow a single task's write).
-            n_out = max(len(affected) if affected else int(n_buckets), 1)
-            merged = merged.repartition(n_out, "_bucket")
-            # materialize before overwriting the dir being read
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").partitionBy("_bucket").parquet(
-                state_dir
-            )
-            commit_layout()
-            # dynamic overwrite cannot DELETE a partition by writing
-            # zero rows to it: an affected bucket whose every key was
-            # deleted keeps its stale files unless dropped explicitly
-            # (≤ n_buckets driver-side dirs — bounded).
-            if affected:
-                present = {
-                    r["_bucket"]
-                    for r in merged.select("_bucket").distinct().collect()
-                }
-                for b in affected:
-                    if b not in present:
-                        sub_fs, sub_path = hadoop_fs(
-                            spark, os.path.join(state_dir, f"_bucket={b}")
-                        )
-                        sub_fs.delete(sub_path, True)
-            if batch_id is not None:
-                write_json_marker(
-                    spark,
-                    state_dir,
-                    "_merge_ledger.json",
-                    {"last_batch_id": int(batch_id)},
-                )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    finally:
-        new.unpersist()
-    return True
-
-
-def merge_write_cdf(
-    spark: SparkSession,
-    state_dir: str,
-    source: DataFrame,
-    changelog_dir: str,
-    keys: list[str],
-    state_schema: str,
-    n_buckets: int = 8,
-    update_set: dict[str, Column] | None = None,
-    delete_when: Column | None = None,
-    insert_when: Column | None = None,
-    batch_id: int | None = None,
-    include_preimages: bool = True,
-    projections: MergeProjections | None = None,
-) -> bool:
-    """:func:`merge_write` and :func:`merge_changes` FUSED for the
-    streaming CDC loop: apply one MERGE batch to the bucketed state
-    dir AND append its Delta-CDF row set (tagged ``_batch_id``) to
-    ``changelog_dir`` — from ONE shared full-outer join per batch.
-
-    ``projections``: the prebuilt :class:`MergeProjections` for this
-    stream's (state schema, source schema, clauses). Per-batch loops
-    SHOULD build it once and pass it here — rebuilding the expression
-    trees per micro-batch costs ~0.6 s of driver-side Py4J work at any
-    data size (measured r13, the q241 wall-clock driver). When None,
-    it is built from the call's arguments (one-shot callers).
-
-    Why a fused sink exists at all: run separately, every micro-batch
-    pays the state scan and the merge join TWICE (once for the feed,
-    once for the apply) plus a defensive checkpoint of the merged
-    state because the apply reads the very files it overwrites. Here
-    the joined frame — bounded by the batch plus the affected
-    buckets' rows, never the table — is bucket-clustered and lazily
-    ``localCheckpoint``-ed; the changelog append materializes it and
-    the post-merge state is then a shuffle-free projection of those
-    blocks, with the emptied-bucket check riding the write as an
-    ``Observation``. Three jobs per batch — affected discovery,
-    changelog write, state write — vs the ~six the unfused pair runs
-    (the q241 SLA driver). Same bucket layout, ledger, and clause
-    semantics as
-    :func:`merge_write` — and strictly BETTER exactly-once: the
-    ledger skip now guards the changelog append too, so an
-    at-least-once replay can't double-feed downstream consumers.
-
-    Returns True if applied, False for an already-applied replay.
-    """
-    from .util import (
-        bucket_layout_guard,
-        hadoop_fs,
-        read_json_marker,
+        scoped_conf,
         write_json_marker,
     )
 
@@ -592,7 +387,6 @@ def merge_write_cdf(
             update_set,
             delete_when,
             insert_when,
-            include_preimages,
         )
     commit_layout = bucket_layout_guard(
         spark,
@@ -609,14 +403,14 @@ def merge_write_cdf(
 
     fs, hpath = hadoop_fs(spark, state_dir)
     # the batch feeds TWO consumers (affected-bucket discovery and the
-    # merge join) — persist it once, the merge_write convention, so
-    # neither pays a second scan of the batch's upstream lineage
-    src_b = source.withColumn("_bucket", bucket).persist()
+    # merge join) — persist it once, so neither pays a second scan of
+    # the batch's upstream lineage
+    batch = source.withColumn("_bucket", bucket).persist()
     try:
         if fs.exists(hpath):
             affected = [
                 r["_bucket"]
-                for r in src_b.select("_bucket").distinct().collect()
+                for r in batch.select("_bucket").distinct().collect()
             ]
             target = (
                 spark.read.schema(state_schema + ", _bucket int")
@@ -629,80 +423,73 @@ def merge_write_cdf(
             target = spark.createDataFrame([], state_schema)
 
         # ONE materialization per batch: the joined frame (affected
-        # buckets + batch, never the table), already clustered on
-        # _bucket so the state write below is shuffle-free and keeps the
-        # one-file-per-bucket invariant. The checkpoint is LAZY — the
-        # changelog append (the first action) materializes it as a side
-        # effect, so the batch runs exactly three jobs: the affected-
-        # bucket discovery, the changelog write, and the state write.
+        # buckets + batch, never the table), clustered on _bucket so the
+        # state write is shuffle-free and keeps one file per bucket — a
+        # partitionBy write emits one file per (task, bucket) pair, so
+        # an unclustered frame would spray small files into every
+        # rewritten bucket dir (set spark.sql.files.maxRecordsPerFile to
+        # re-split buckets that outgrow a single task's write). The
+        # state write overwrites the files the join reads, so the
+        # checkpoint must be materialized first: by the changelog append
+        # when there is one (lazy), else right here (eager).
         n_out = max(len(affected) if affected else int(n_buckets), 1)
         joined = (
-            _merge_join(target, src_b.drop("_bucket"), keys)
+            _merge_join(target, batch.drop("_bucket"), keys)
             .withColumn("_bucket", bucket)
             .repartition(n_out, "_bucket")
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=changelog_dir is None)
         )
+        if changelog_dir is not None:
+            changes = projections.changes(joined)
+            if batch_id is not None:
+                changes = changes.withColumn(
+                    "_batch_id", F.lit(int(batch_id)).cast("int")
+                )
+            # the post/pre union doubles the partition count (2×n_out);
+            # coalesce pairs them back without a shuffle — half the
+            # output files per batch (the changelog is O(batch) rows by
+            # the CDC contract, so n_out-sized files are the right grain)
+            changes.coalesce(n_out).write.mode("append").parquet(changelog_dir)
 
-        changes = projections.changes(joined)
-        if batch_id is not None:
-            changes = changes.withColumn(
-                "_batch_id", F.lit(int(batch_id)).cast("int")
-            )
-        # the post/pre union doubles the partition count (2×n_out);
-        # coalesce pairs them back without a shuffle — half the output
-        # files and commit ops per batch, same parallelism as the state
-        # write (the changelog is O(batch) rows by the CDC contract, so
-        # n_out-sized files are the right grain at any scale)
-        changes.coalesce(n_out).write.mode("append").parquet(changelog_dir)
-
-        merged = projections.into(joined).withColumn("_bucket", bucket)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # the frame is checkpoint-backed so the dynamic overwrite of
-            # the dirs it came from is safe; an Observation on the write
-            # job reports which buckets actually received rows — the
-            # empties check below costs NO extra job.
-            observation = Observation()
-            merged = merged.observe(
-                observation, F.collect_set("_bucket").alias("present")
-            )
+        # an Observation on the write job reports which buckets received
+        # rows — the emptied-bucket check below costs no extra job
+        observation = Observation()
+        merged = (
+            projections.into(joined)
+            .withColumn("_bucket", bucket)
+            .observe(observation, F.collect_set("_bucket").alias("present"))
+        )
+        with scoped_conf(
+            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        ):
             merged.write.mode("overwrite").partitionBy("_bucket").parquet(
                 state_dir
             )
-            commit_layout()
-            if affected:
-                # dynamic overwrite cannot DELETE a partition by writing
-                # zero rows to it: an affected bucket whose every key was
-                # deleted keeps its stale files unless dropped explicitly
-                # (≤ n_buckets driver-side dirs — bounded).
-                present = set(observation.get["present"])
-                for b in affected:
-                    if b not in present:
-                        sub_fs, sub_path = hadoop_fs(
-                            spark, os.path.join(state_dir, f"_bucket={b}")
-                        )
-                        sub_fs.delete(sub_path, True)
-            if batch_id is not None:
-                write_json_marker(
-                    spark,
-                    state_dir,
-                    "_merge_ledger.json",
-                    {"last_batch_id": int(batch_id)},
-                )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+        commit_layout()
+        if affected:
+            # dynamic overwrite cannot DELETE a partition by writing
+            # zero rows to it: an affected bucket whose every key was
+            # deleted keeps its stale files unless dropped explicitly
+            # (≤ n_buckets driver-side dirs — bounded).
+            present = set(observation.get["present"])
+            for b in affected:
+                if b not in present:
+                    sub_fs, sub_path = hadoop_fs(
+                        spark, os.path.join(state_dir, f"_bucket={b}")
+                    )
+                    sub_fs.delete(sub_path, True)
+        if batch_id is not None:
+            write_json_marker(
+                spark,
+                state_dir,
+                "_merge_ledger.json",
+                {"last_batch_id": int(batch_id)},
+            )
     finally:
-        # unpersist on EVERY exit path: merge_write_cdf calls
-        # this once per micro-batch, so a raise between the
-        # persist and the old late try/finally would leak one
-        # cached batch per failed batch (ADVICE r11)
-        src_b.unpersist()
+        # unpersist on EVERY exit path: a streaming caller runs this once
+        # per micro-batch, so a raise would otherwise leak one cached
+        # batch per failed batch
+        batch.unpersist()
     return True
 
 
@@ -728,7 +515,7 @@ def compact_buckets(
     n_buckets, never by rows. Already-compact buckets are skipped —
     cost ∝ fragmented buckets, like merge_write's touched-bucket
     pruning."""
-    from .util import hadoop_fs
+    from .util import hadoop_fs, scoped_conf
 
     fs, root = hadoop_fs(spark, state_dir)
     if not fs.exists(root):
@@ -759,18 +546,11 @@ def compact_buckets(
         compacted = df.repartition(len(fragmented), "_bucket")
         # materialize before overwriting the dirs being read
         compacted = compacted.localCheckpoint(eager=True)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(
+            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        ):
             compacted.write.mode("overwrite").partitionBy("_bucket").parquet(
                 state_dir
             )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
     after = _bucket_files()
     return {b: (before[b], after[b]) for b in sorted(before)}

@@ -150,26 +150,28 @@ def salted_join(
 
 
 @contextlib.contextmanager
-def pinned_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin ``spark.sql.shuffle.partitions``.
+def scoped_conf(spark: SparkSession, key: str, value: str | int | None):
+    """Set the session conf ``key`` to ``value`` for the block, then
+    restore the previous value — or unset it if it was unset — also
+    when the block raises. No-op when ``value`` is None.
 
-    For plan fragments whose shuffled data is orders of magnitude
-    smaller than the session default was sized for (an iterative
-    fixpoint over a pair graph, a stateful stream's per-partition state
-    stores), the default partition count is pure scheduling overhead —
-    each extra partition is a task plus, for checkpointed loops, a
-    materialized empty file per round. No-op when ``n`` is None.
-    Restores the previous value on exit.
+    The one place a session conf is changed for part of a job: a
+    fixpoint loop pinning ``spark.sql.shuffle.partitions`` to its tiny
+    pair graph, a stream pinning its state-store count or provider, a
+    bucketed sink scoping dynamic partition overwrite to its write.
     """
-    if n is None:
+    if value is None:
         yield
         return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def read_json_marker(spark, dir_path: str, name: str) -> dict | None:

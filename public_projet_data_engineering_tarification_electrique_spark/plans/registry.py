@@ -5573,6 +5573,29 @@ def q228_pr_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr_at_deciles(scored, "score", "is_en")
 
 
+def _orders_digest(orders: DataFrame, lo: str | None, hi: str | None) -> DataFrame:
+    """Per-customer orders digest for the MERGE/CDF family (q229,
+    q234–q237, q240): one CDC-style row per custkey over an order-date epoch
+    [lo, hi) — counts, integer-cent totals, last date."""
+    df = orders
+    if lo is not None:
+        df = df.filter(F.col("o_orderdate") >= F.lit(lo))
+    if hi is not None:
+        df = df.filter(F.col("o_orderdate") < F.lit(hi))
+    return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.count("*").cast("long").alias("n_orders"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            "total_cents"
+        ),
+        # DATE, not raw timestamp: the q240 sink declares `last_date
+        # date` (a timestamp would land as parquet INT64 and break the
+        # declared-schema read); cast-to-date is monotonic so
+        # max-then-cast == cast-then-max and the formatted output is
+        # unchanged for the pure-plan consumers (q229, q235–q237).
+        F.max(F.col("o_orderdate").cast("date")).alias("last_date"),
+    )
+
+
 def q229_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-style MERGE INTO as a declarative plan (operators/merge):
     a warehouse per-customer order digest (orders before 1997-01-01)
@@ -5585,39 +5608,14 @@ def q229_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     §2.9); one full-outer join on the key — AQE broadcasts the small
     CDC side; at 100 TB both sides bucket on the key (merge_write).
     Money stays integer cents until the terminal division."""
-    from ..operators.merge import merge_into, src
+    from ..operators.merge import merge_into
+    from ..streaming.cdc_feed import _additive_clauses, _cdc_op
 
     orders = load_table(spark, sf_dir, "orders")
     cut = "1997-01-01"
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-            F.max("o_orderdate").alias("last_date"),
-        )
-
-    target = digest(orders.filter(F.col("o_orderdate") < F.lit(cut)))
-    source = digest(orders.filter(F.col("o_orderdate") >= F.lit(cut))).withColumn(
-        "op",
-        F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
-            F.lit("U")
-        ),
-    )
-    merged = merge_into(
-        target,
-        source,
-        keys=["custkey"],
-        update_set={
-            "n_orders": F.col("n_orders") + src("n_orders"),
-            "total_cents": F.col("total_cents") + src("total_cents"),
-            "last_date": F.greatest(F.col("last_date"), src("last_date")),
-        },
-        delete_when=src("op") == "D",
-        insert_when=src("op") != "D",
-    )
+    target = _orders_digest(orders, None, cut)
+    source = _orders_digest(orders, cut, None).withColumn("op", _cdc_op())
+    merged = merge_into(target, source, keys=["custkey"], **_additive_clauses())
     return merged.select(
         "custkey",
         "n_orders",
@@ -5641,27 +5639,11 @@ def q234_merge_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     cut = "1997-01-01"
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-        )
-
     state = scratch_dir("merge_ledger_state_")
     schema = "custkey long, n_orders long, total_cents long"
-    merge_write(
-        spark,
-        state,
-        digest(orders.filter(F.col("o_orderdate") < F.lit(cut))),
-        ["custkey"],
-        schema,
-        n_buckets=8,
-        batch_id=0,
-    )
-    batch = digest(orders.filter(F.col("o_orderdate") >= F.lit(cut)))
+    base = _orders_digest(orders, None, cut).drop("last_date")
+    merge_write(spark, state, base, ["custkey"], schema, n_buckets=8, batch_id=0)
+    batch = _orders_digest(orders, cut, None).drop("last_date")
     kwargs = dict(
         update_set={
             "n_orders": F.col("n_orders") + src("n_orders"),
@@ -5692,40 +5674,15 @@ def q235_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication) subscribes to instead of diffing two 100 TB
     snapshots. Same single full-outer join as the merge itself;
     unaffected target-only keys emit nothing."""
-    from ..operators.merge import merge_changes, src
+    from ..operators.merge import merge_changes
+    from ..streaming.cdc_feed import _additive_clauses, _cdc_op
 
     orders = load_table(spark, sf_dir, "orders")
     cut = "1997-01-01"
-
-    def digest(df: DataFrame) -> DataFrame:
-        return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "total_cents"
-            ),
-            F.max("o_orderdate").alias("last_date"),
-        )
-
-    target = digest(orders.filter(F.col("o_orderdate") < F.lit(cut)))
-    source = digest(
-        orders.filter(F.col("o_orderdate") >= F.lit(cut))
-    ).withColumn(
-        "op",
-        F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
-            F.lit("U")
-        ),
-    )
+    target = _orders_digest(orders, None, cut)
+    source = _orders_digest(orders, cut, None).withColumn("op", _cdc_op())
     changes = merge_changes(
-        target,
-        source,
-        keys=["custkey"],
-        update_set={
-            "n_orders": F.col("n_orders") + src("n_orders"),
-            "total_cents": F.col("total_cents") + src("total_cents"),
-            "last_date": F.greatest(F.col("last_date"), src("last_date")),
-        },
-        delete_when=src("op") == "D",
-        insert_when=src("op") != "D",
+        target, source, keys=["custkey"], **_additive_clauses()
     )
     return changes.select(
         "custkey",
@@ -5733,29 +5690,6 @@ def q235_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("total_cents") / 100.0, 2).alias("total_price"),
         F.date_format("last_date", "yyyy-MM-dd").alias("last_date"),
         "_change_type",
-    )
-
-
-def _orders_digest(orders: DataFrame, lo: str | None, hi: str | None) -> DataFrame:
-    """Per-customer orders digest for the MERGE/CDF family (q229,
-    q234–q237): one CDC-style row per custkey over an order-date epoch
-    [lo, hi) — counts, integer-cent totals, last date."""
-    df = orders
-    if lo is not None:
-        df = df.filter(F.col("o_orderdate") >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col("o_orderdate") < F.lit(hi))
-    return df.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.count("*").cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "total_cents"
-        ),
-        # DATE, not raw timestamp: the q240 sink declares `last_date
-        # date` (a timestamp would land as parquet INT64 and break the
-        # declared-schema read); cast-to-date is monotonic so
-        # max-then-cast == cast-then-max and the formatted output is
-        # unchanged for the pure-plan consumers (q236/q237).
-        F.max(F.col("o_orderdate").cast("date")).alias("last_date"),
     )
 
 
@@ -5771,28 +5705,15 @@ def q236_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_merge_streamdedup.py pins the full chain (replayed v2 ==
     the direct merge_into result, row-for-row). Delete clause: every
     50th customer's CDC row is a delete, exercising tombstone replay."""
-    from ..operators.merge import apply_changes, merge_changes, src
+    from ..operators.merge import apply_changes, merge_changes
+    from ..streaming.cdc_feed import _additive_clauses, _cdc_op
 
     orders = load_table(spark, sf_dir, "orders")
     base = _orders_digest(orders, None, "1996-01-01")
     batch1 = _orders_digest(orders, "1996-01-01", "1997-06-01").withColumn(
-        "op",
-        F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
-            F.lit("U")
-        ),
+        "op", _cdc_op()
     )
-    cdf1 = merge_changes(
-        base,
-        batch1,
-        keys=["custkey"],
-        update_set={
-            "n_orders": F.col("n_orders") + src("n_orders"),
-            "total_cents": F.col("total_cents") + src("total_cents"),
-            "last_date": F.greatest(F.col("last_date"), src("last_date")),
-        },
-        delete_when=src("op") == "D",
-        insert_when=src("op") != "D",
-    )
+    cdf1 = merge_changes(base, batch1, keys=["custkey"], **_additive_clauses())
     v1 = apply_changes(base, cdf1, keys=["custkey"])
     return v1.select(
         "custkey",
@@ -5815,17 +5736,13 @@ def q237_incremental_agg_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark. Oracle recomputes the view directly from the merged state,
     so any missing retraction breaks value parity (segments whose
     every key updates would double-count)."""
-    from ..operators.merge import merge_changes, src
+    from ..operators.merge import merge_changes
+    from ..streaming.cdc_feed import _additive_clauses, _cdc_op
 
     orders = load_table(spark, sf_dir, "orders")
     cut = "1997-01-01"
     base = _orders_digest(orders, None, cut)
-    batch = _orders_digest(orders, cut, None).withColumn(
-        "op",
-        F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
-            F.lit("U")
-        ),
-    )
+    batch = _orders_digest(orders, cut, None).withColumn("op", _cdc_op())
     seg = F.pmod(F.col("custkey"), F.lit(8)).cast("int").alias("segment")
     view_base = base.groupBy(seg).agg(
         F.count("*").cast("long").alias("n_keys"),
@@ -5833,17 +5750,8 @@ def q237_incremental_agg_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("total_cents").cast("long").alias("sum_cents"),
     )
     cdf = merge_changes(
-        base,
-        batch,
-        keys=["custkey"],
-        update_set={
-            "n_orders": F.col("n_orders") + src("n_orders"),
-            "total_cents": F.col("total_cents") + src("total_cents"),
-            "last_date": F.greatest(F.col("last_date"), src("last_date")),
-        },
-        delete_when=src("op") == "D",
-        insert_when=src("op") != "D",
-        include_preimages=True,
+        base, batch, keys=["custkey"], include_preimages=True,
+        **_additive_clauses(),
     )
     sign = (
         F.when(F.col("_change_type").isin("insert", "update_postimage"), F.lit(1))
@@ -8555,9 +8463,10 @@ _RESAMPLE_PRIORITY: dict[str, int] = {
     # moved to the per-process scratch database. Re-prove each.
     "q252": 10, "q254": 10, "q255": 10, "q257": 10, "q258": 10,
     "q260": 10, "q261": 10, "q230": 10, "q232": 10, "q99": 10,
-    # Round-11 rewrites: q241's CDC loop moved to the fused
-    # merge_write_cdf sink (one join + lazy bucket-clustered
-    # checkpoint per batch) with single-scan epoch staging; q280's
+    # Round-11 rewrites: q241's CDC loop moved to the fused changelog
+    # sink, now merge_write(changelog_dir=...) (one join + lazy
+    # bucket-clustered checkpoint per batch) with single-scan epoch
+    # staging; q280's
     # lttb gained the n<=n_buckets identity pass-through (oracle
     # moved in lockstep). Re-prove both at the new shapes.
     "q241": 11, "q280": 11,

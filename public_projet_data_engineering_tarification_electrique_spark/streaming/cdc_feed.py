@@ -5,24 +5,31 @@ pipeline wires them: q116's foreachBatch merge + q229/q234's
 ledgered merge_write + q235/q237's retraction-complete CDF, running
 as ONE stream).
 
-Per micro-batch (one CDC epoch file per trigger):
+Per micro-batch (one CDC epoch file per trigger), ONE
+``merge_write(..., changelog_dir=..., batch_id=epoch)`` call:
 
-1. ``merge_changes(state, batch, include_preimages=True)`` computes
-   the Delta-CDF row set against the PRE-merge state;
-2. the changelog rows append to the feed dir tagged with the epoch id
-   (the bounded per-batch feed downstream consumers subscribe to);
-3. ``merge_write`` applies the same batch to the bucket-partitioned
-   state under the txn ledger (replays skipped — exactly-once even
-   for the additive update_set).
+1. checks the txn ledger — a replayed epoch is skipped whole, so it
+   neither re-applies the additive update_set nor re-feeds the log;
+2. joins the batch with the affected buckets of the PRE-merge state
+   (one full-outer join on the key) and appends that join's Delta-CDF
+   row set, pre-images included and tagged with the epoch id, to the
+   feed dir (the bounded per-batch feed downstream consumers
+   subscribe to);
+3. rewrites the affected state buckets from the same join.
 
-Scale shape: both steps are one full-outer join on the key per batch
-(AQE broadcasts small epochs), the state rewrite touches only
-affected buckets, and the changelog is O(batch) — the feed never
-re-reads more than the epoch and its matched keys. Epoch ORDER is
-the CDC contract (updates compose, deletes tombstone), so the landing
-files get explicit strictly-increasing mtimes — Spark's
-FileStreamSource schedules by (modification time, path), making the
-batch sequence deterministic.
+Scale shape: one full-outer join on the key per batch (AQE broadcasts
+small epochs), the state rewrite touches only affected buckets, and
+the changelog is O(batch) — the feed never re-reads more than the
+epoch and its matched keys. Epoch ORDER is the CDC contract (updates
+compose, deletes tombstone), so the landing files get explicit
+strictly-increasing mtimes — Spark's FileStreamSource schedules by
+(modification time, path), making the batch sequence deterministic.
+
+:func:`_cdc_op` and :func:`_additive_clauses` are the CDC flag and
+clause set of the whole orders-digest MERGE family (q229, q235–q237
+and this stream). They are functions because a Column needs a live
+session, and underscore-named because they only make Columns: they
+are not operators the benchmark should time.
 """
 
 from __future__ import annotations
@@ -30,11 +37,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.merge import MergeProjections, merge_write_cdf, src
+from ..operators.merge import MergeProjections, merge_write, src
 from ..operators.util import scratch_dir
 from ..session import configure
 from .runner import _drain
@@ -45,6 +52,30 @@ DIGEST_SCHEMA = (
     "op string"
 )
 STATE_SCHEMA = "custkey long, n_orders long, total_cents long, last_date date"
+
+
+def _cdc_op() -> Column:
+    """The synthetic CDC op flag of a digest row: every 50th customer
+    is a delete ('D'), the rest are updates ('U')."""
+    return F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
+        F.lit("U")
+    )
+
+
+def _additive_clauses() -> dict:
+    """The MERGE clauses over the digest (keyword arguments of the
+    merge family): a matched row adds counts and cents and keeps the
+    later date, a 'D' row deletes its match, and a 'D' row for an
+    unknown key is not inserted."""
+    return dict(
+        update_set={
+            "n_orders": F.col("n_orders") + src("n_orders"),
+            "total_cents": F.col("total_cents") + src("total_cents"),
+            "last_date": F.greatest(F.col("last_date"), src("last_date")),
+        },
+        delete_when=src("op") == "D",
+        insert_when=src("op") != "D",
+    )
 
 
 def _all_epoch_digests(
@@ -71,12 +102,7 @@ def _all_epoch_digests(
             "total_cents"
         ),
         F.max(F.col("o_orderdate").cast("date")).alias("last_date"),
-    ).withColumn(
-        "op",
-        F.when(F.pmod(F.col("custkey"), F.lit(50)) == 0, F.lit("D")).otherwise(
-            F.lit("U")
-        ),
-    )
+    ).withColumn("op", _cdc_op())
 
 
 def stream_cdc_changelog(
@@ -129,45 +155,33 @@ def stream_cdc_changelog(
 
     state = scratch_dir("cdc_state_")
     changelog = scratch_dir("cdc_changelog_")
-    merge_kwargs = dict(
-        keys=["custkey"],
-        update_set={
-            "n_orders": F.col("n_orders") + src("n_orders"),
-            "total_cents": F.col("total_cents") + src("total_cents"),
-            "last_date": F.greatest(F.col("last_date"), src("last_date")),
-        },
-        delete_when=src("op") == "D",
-        insert_when=src("op") != "D",
-    )
     # Build the merge expression trees ONCE per stream (guide §1.2):
     # they are pure functions of the fixed digest/state schemas and
-    # the clauses above; rebuilding them per micro-batch measured
-    # ~0.6 s/batch of driver-side Py4J work — the single largest
-    # per-batch cost of this stream.
+    # the clauses; rebuilding them per micro-batch measured ~0.6 s/batch
+    # of driver-side Py4J work — the single largest per-batch cost of
+    # this stream.
     proj = MergeProjections(
         state_cols=[f.name for f in StructType.fromDDL(STATE_SCHEMA).fields],
         source_cols=[f.name for f in StructType.fromDDL(DIGEST_SCHEMA).fields],
-        include_preimages=True,
-        **merge_kwargs,
+        keys=["custkey"],
+        **_additive_clauses(),
     )
 
     def _apply(batch: DataFrame, bid: int) -> None:
-        # the FUSED sink: one state read + one full-outer join +
-        # one checkpoint per batch yields BOTH the CDF changelog
-        # (tagged _batch_id, ledger-guarded exactly-once) and the
-        # bucket-pruned state rewrite — the per-batch fixed cost
-        # that set q241's wall clock when run as two separate steps
-        merge_write_cdf(
+        # one state read + one full-outer join + one checkpoint per
+        # batch yields BOTH the CDF changelog (tagged _batch_id,
+        # ledger-guarded exactly-once) and the bucket-pruned state
+        # rewrite
+        merge_write(
             batch.sparkSession,
             state,
             batch,
-            changelog_dir=changelog,
-            state_schema=STATE_SCHEMA,
+            ["custkey"],
+            STATE_SCHEMA,
             n_buckets=n_buckets,
             batch_id=int(bid),
-            include_preimages=True,
+            changelog_dir=changelog,
             projections=proj,
-            **merge_kwargs,
         )
 
     stream = (

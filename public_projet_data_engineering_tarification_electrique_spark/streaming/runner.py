@@ -26,14 +26,13 @@ stream's batches to the public stream function that launched it.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..operators.util import hadoop_fs, pinned_shuffle_partitions, scratch_dir
+from ..operators.util import hadoop_fs, scoped_conf, scratch_dir
 
 #: shuffle partitions (= state stores) of every stateful stream
 STATE_PARTITIONS = 8
@@ -45,22 +44,6 @@ _ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
-
-
-@contextlib.contextmanager
-def _state_store(spark, rocksdb: bool):
-    if not rocksdb:
-        yield
-        return
-    prev = spark.conf.get(_PROVIDER, None)
-    spark.conf.set(_PROVIDER, _ROCKSDB)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER)
-        else:
-            spark.conf.set(_PROVIDER, prev)
 
 
 def _drain(
@@ -75,8 +58,9 @@ def _drain(
     writer = writer.option(
         "checkpointLocation", checkpoint or scratch_dir("ckpt_")
     ).trigger(availableNow=True)
-    with pinned_shuffle_partitions(spark, partitions), _state_store(
-        spark, rocksdb
+    with (
+        scoped_conf(spark, "spark.sql.shuffle.partitions", partitions),
+        scoped_conf(spark, _PROVIDER, _ROCKSDB if rocksdb else None),
     ):
         writer.start().awaitTermination()
 

@@ -246,6 +246,133 @@ def test_merge_write_one_file_per_bucket(spark, tmp_path):
     assert rows.agg(F.sum("v")).collect()[0][0] == 4000
 
 
+def _second_source(spark):
+    # k=1 updated again, k=4 (inserted by the first batch) deleted,
+    # k=6 inserted
+    return spark.createDataFrame(
+        [(1, 1, "a3", "U"), (4, 0, "z", "D"), (6, 60, "f", "U")],
+        "k long, v long, tag string, op string",
+    )
+
+
+def test_merge_write_changelog_matches_merge_changes(spark, tmp_path):
+    """merge_write(changelog_dir=...) over two ledgered batches: the
+    state equals merge_into applied twice, each batch appends exactly
+    merge_changes(include_preimages=True) against its pre-batch state
+    tagged with its batch id, a replay adds nothing, and the bucket
+    count changes neither the state nor the changelog."""
+    from public_projet_data_engineering_tarification_electrique_spark.operators.merge import (
+        merge_changes,
+    )
+
+    schema = "k long, v long, tag string"
+    kwargs = dict(
+        update_set={"v": F.col("v") + src("v")},
+        delete_when=src("op") == "D",
+        insert_when=src("op") != "D",
+    )
+    batches = [_source(spark), _second_source(spark)]
+    pre = [_target(spark), merge_into(_target(spark), batches[0], ["k"], **kwargs)]
+    expected_state = sorted(
+        map(tuple, merge_into(pre[1], batches[1], ["k"], **kwargs).collect())
+    )
+    expected_log = sorted(
+        tuple(r) + (b,)
+        for b in (0, 1)
+        for r in merge_changes(
+            pre[b], batches[b], ["k"], include_preimages=True, **kwargs
+        ).collect()
+    )
+
+    def run(n_buckets):
+        state = str(tmp_path / f"state{n_buckets}")
+        log = str(tmp_path / f"log{n_buckets}")
+        merge_write(spark, state, _target(spark), ["k"], schema,
+                    n_buckets=n_buckets)
+
+        def read():
+            st = spark.read.schema(schema + ", _bucket int").parquet(state)
+            cl = spark.read.schema(
+                schema + ", _change_type string, _batch_id int"
+            ).parquet(log)
+            return (
+                sorted(map(tuple, st.drop("_bucket").collect())),
+                sorted(map(tuple, cl.collect())),
+            )
+
+        for b, batch in enumerate(batches):
+            assert merge_write(spark, state, batch, ["k"], schema,
+                               n_buckets=n_buckets, batch_id=b,
+                               changelog_dir=log, **kwargs)
+        got = read()
+        assert got == (expected_state, expected_log)
+        # replay of the last batch: skipped, nothing appended
+        assert not merge_write(spark, state, batches[1], ["k"], schema,
+                               n_buckets=n_buckets, batch_id=1,
+                               changelog_dir=log, **kwargs)
+        assert read() == got
+        return got
+
+    assert run(1) == run(8)
+
+
+def test_merge_write_scopes_dynamic_overwrite(spark, tmp_path):
+    """Under a session set to static partition overwrite, a merge_write
+    touching one bucket of eight rewrites only that bucket (static mode
+    would wipe the other seven), and the session reads static again
+    afterwards — also after a batch that raises while writing."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    state = str(tmp_path / "state")
+    schema = "k long, v long, tag string"
+    base = spark.range(64).select(
+        F.col("id").alias("k"), F.lit(1).cast("long").alias("v"),
+        F.lit("z").alias("tag"),
+    )
+    merge_write(spark, state, base, ["k"], schema, n_buckets=8)
+    touched = "_bucket=%d" % (
+        spark.read.schema(schema + ", _bucket int").parquet(state)
+        .filter("k = 7").first()["_bucket"]
+    )
+    one = spark.createDataFrame([(7, 99, "u")], schema)
+
+    def files():
+        return {
+            d: {
+                (f, os.path.getmtime(os.path.join(state, d, f)))
+                for f in os.listdir(os.path.join(state, d))
+            }
+            for d in os.listdir(state)
+            if d.startswith("_bucket=")
+        }
+
+    def others(listing):
+        return {d: fs for d, fs in listing.items() if d != touched}
+
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        before = files()
+        assert len(others(before)) == 7
+        merge_write(spark, state, one, ["k"], schema, n_buckets=8)
+        assert spark.conf.get(key) == "static"
+        after = files()
+        assert others(after) == others(before)
+        assert after[touched] != before[touched]
+
+        with pytest.raises(Exception, match="boom"):
+            merge_write(spark, state, one, ["k"], schema, n_buckets=8,
+                        update_set={"v": F.raise_error(F.lit("boom"))})
+        assert spark.conf.get(key) == "static"
+        assert others(files()) == others(after)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    rows = spark.read.schema(schema + ", _bucket int").parquet(state)
+    assert rows.count() == 64 and rows.filter("k = 7").first()["v"] == 99
+
+
 def test_stream_dedup_matches_batch_distinct(spark):
     from public_projet_data_engineering_tarification_electrique_spark.streaming.dedup_stream import (
         normalized_prefix_key,
@@ -446,11 +573,7 @@ def test_apply_changes_replays_time_travel_chain(spark):
         delete_when=src("op") == "D",
         insert_when=src("op") != "D",
     )
-    t, s1 = _target(spark), _source(spark)
-    s2 = spark.createDataFrame(
-        [(1, 1, "a3", "U"), (4, 0, "z", "D"), (6, 60, "f", "U")],
-        "k long, v long, tag string, op string",
-    )
+    t, s1, s2 = _target(spark), _source(spark), _second_source(spark)
     for pre in (False, True):
         v1 = apply_changes(
             t, merge_changes(t, s1, include_preimages=pre, **kwargs), ["k"]

@@ -212,19 +212,28 @@ def test_merge_batch_upsert_semantics(spark, tmp_path):
 
     state = str(tmp_path / "state")
     cols = "user_id long, last_event_id long, last_value double, last_ts_us long"
-    b1 = spark.createDataFrame([(1, 10, 1.0, 100), (2, 20, 2.0, 200)], cols)
+    b1 = spark.createDataFrame(
+        [(1, 10, 1.0, 100), (2, 20, 2.0, 200), (None, 30, 3.0, 150)], cols
+    )
     _merge_batch(spark, b1, state, n_buckets=4)
-    b2 = spark.createDataFrame([(2, 21, 2.5, 300), (7, 70, 7.0, 400)], cols)
+    b2 = spark.createDataFrame(
+        [(2, 21, 2.5, 300), (7, 70, 7.0, 400), (None, 31, 3.5, 350)], cols
+    )
     _merge_batch(spark, b2, state, n_buckets=4)
-    got = {
-        r["user_id"]: (r["last_event_id"], r["last_value"], r["last_ts_us"])
+    rows = [
+        (r["user_id"], (r["last_event_id"], r["last_value"], r["last_ts_us"]))
         for r in spark.read.schema(STATE_SCHEMA).parquet(state).collect()
-    }
-    assert got == {
+    ]
+    assert dict(rows) == {
         1: (10, 1.0, 100),   # untouched key survives (bucket 1 not rewritten)
         2: (21, 2.5, 300),   # updated in place
         7: (70, 7.0, 400),   # inserted
+        # the NULL user's bucket dir is overwritten whole: exactly one
+        # NULL-user row survives, the later batch's (q116's oracle
+        # partitions by user_id, so NULL users form one group)
+        None: (31, 3.5, 350),
     }
+    assert len(rows) == 4
 
 
 def test_stream_upsert_resume_keeps_full_state(spark, tmp_path):
