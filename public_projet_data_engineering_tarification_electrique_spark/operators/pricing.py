@@ -31,6 +31,8 @@ dimension snapshot, the request plus its two looked-up values become
 one Arrow-backed local row, and the batch plan's own status/price
 projection is folded into that row by Catalyst
 (``ConvertToLocalRelation``), so ``head()`` runs on the driver.
+That projection's Columns are built once per SparkContext and applied
+as two ``select``s, so a warm request makes no ``F.*`` call.
 Freshness rule: a cached ``daily``/``annual`` pair is a snapshot, and
 its maps are kept for as long as both frames stay cached and alive;
 pass new frames (or unpersist these) to see new data. Frames that are
@@ -45,7 +47,7 @@ import weakref
 from typing import NamedTuple
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -199,36 +201,49 @@ def score_requests_with_status(
     )
 
 
-def _price_projection(scored: DataFrame) -> DataFrame:
-    """status, conso_foyer, m_factor and price over request rows that
-    already carry their looked-up ``conso30`` and ``alpha`` (NULL = no
-    dimension row). The one projection behind both serving paths."""
+def _projection_columns() -> tuple[list[Column], Column]:
+    """The Columns behind ``_price_projection``: aliased status,
+    conso_foyer and m_factor, then price, which reads those by name."""
     missing = F.lit(False)
     for c in sorted(PRICING_REQUEST_REQUIRED):
         missing = missing | F.col(c).isNull()
-    return (
-        scored.withColumn(
-            "status",
-            F.when(missing, F.lit(STATUS_MISSING_FIELD))
-            .when(F.col("conso30").isNull(), F.lit(STATUS_UNKNOWN_REGION))
-            .when(F.col("alpha").isNull(), F.lit(STATUS_UNKNOWN_CITY))
-            .otherwise(F.lit(STATUS_OK)),
-        )
-        .withColumn(
-            "conso_foyer",
-            household_consumption_kwh(F.col("nb_m2"), F.col("nb_personne")),
-        )
-        .withColumn("m_factor", F.round(m_factor(F.col("conso30")), 6))
-        .withColumn(
-            "price",
-            F.when(
-                F.col("status") == STATUS_OK,
-                annual_price(
-                    F.col("alpha"), F.col("m_factor"), F.col("conso_foyer")
-                ),
-            ),
-        )
-    )
+    derived = [
+        F.when(missing, F.lit(STATUS_MISSING_FIELD))
+        .when(F.col("conso30").isNull(), F.lit(STATUS_UNKNOWN_REGION))
+        .when(F.col("alpha").isNull(), F.lit(STATUS_UNKNOWN_CITY))
+        .otherwise(F.lit(STATUS_OK))
+        .alias("status"),
+        household_consumption_kwh(F.col("nb_m2"), F.col("nb_personne")).alias(
+            "conso_foyer"
+        ),
+        F.round(m_factor(F.col("conso30")), 6).alias("m_factor"),
+    ]
+    price = F.when(
+        F.col("status") == STATUS_OK,
+        annual_price(F.col("alpha"), F.col("m_factor"), F.col("conso_foyer")),
+    ).alias("price")
+    return derived, price
+
+
+#: SparkContext → ``_projection_columns()``. Weak keys: a stopped and
+#: restarted session builds its own.
+_PROJECTIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PROJECTIONS_LOCK = threading.Lock()
+
+
+def _price_projection(scored: DataFrame) -> DataFrame:
+    """status, conso_foyer, m_factor and price over request rows that
+    already carry their looked-up ``conso30`` and ``alpha`` (NULL = no
+    dimension row). The one projection behind both serving paths.
+
+    Two selects, not one: inlining status and m_factor into price would
+    repeat the status CASE inside price in the optimized plan."""
+    sc = scored.sparkSession.sparkContext
+    with _PROJECTIONS_LOCK:
+        if sc not in _PROJECTIONS:
+            _PROJECTIONS[sc] = _projection_columns()
+        derived, price = _PROJECTIONS[sc]
+    return scored.select("*", *derived).select("*", price)
 
 
 #: one request with every field nullable: an absent key is a NULL field

@@ -5275,15 +5275,12 @@ def q213_source_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q214_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 `transformWithStateInPandas` (StatefulProcessor +
-    ValueState, RocksDB state store): running per-user event count +
-    exact-grid value total, emitted every micro-batch, collapsed to
-    final totals (monotone, so max over the emitted log is exact
-    regardless of batch slicing). Where the TWS Python runtime cannot
-    start (no `google.protobuf` in this container), the SAME state
-    semantics bind through applyInPandasWithState — the value gate
-    checks the semantics, the API choice is environment-probed
-    (streaming/stateful.py:tws_available)."""
+    """Arbitrary-stateful streaming (`applyInPandasWithState`): running
+    per-user event count + exact-grid value total, emitted every
+    micro-batch, collapsed to final totals (monotone, so max over the
+    emitted log is exact regardless of batch slicing). The query keeps
+    its name; `transformWithStateInPandas` is not bound, since its
+    Python worker needs `google.protobuf` (streaming/stateful.py)."""
     from ..streaming.stateful import running_user_totals
 
     return running_user_totals(spark, f"{sf_dir}/events.parquet")

@@ -1,42 +1,25 @@
-"""Arbitrary-stateful streaming via the Spark 4 `transformWithState`
-API (StatefulProcessor + typed state variables), with a semantics-
-identical `applyInPandasWithState` binding as the fallback when the
-TWS Python runtime is unavailable.
+"""Arbitrary-stateful streaming: a running per-key aggregate through
+`applyInPandasWithState`.
 
-`transformWithStateInPandas` is the successor stateful API: named,
-independently-evolvable state variables (ValueState / ListState /
-MapState), timers decoupled from output, TTL, and RocksDB-backed
-state — the operator you reach for when per-key state outgrows the
-single-row struct `applyInPandasWithState` forces. The demo operator
-here is the canonical running per-key aggregate (events per user +
-exact-grid value total): state is one (n, sum) ValueState per user,
-each micro-batch folds its Arrow batches into it, and the final
-per-user totals are emitted every batch (monotone accumulators, so
-the LAST row per user is the answer and a max() collapse of the
-emitted log is deterministic regardless of batch slicing).
+The operator is the canonical running per-key aggregate (events per
+user + exact-grid value total): state is one (n, sum) pair per user,
+each micro-batch folds its Arrow batches into it, and the post-batch
+totals of the users seen in a batch are emitted every batch (monotone
+accumulators, so the LAST row per user is the answer and a max()
+collapse of the emitted log is deterministic regardless of batch
+slicing).
 
-Environment gate: the TWS Python worker speaks protobuf to the JVM
-state server; in containers without `google.protobuf` (like this
-test harness — no pip installs) the TWS driver worker cannot start
-AT ALL, so the operator transparently binds the SAME state semantics
-through `applyInPandasWithState` (state = the same (n, sum) struct,
-same per-batch fold, same emitted rows). Which binding ran is an
-implementation detail the value gate cannot see — both produce the
-identical per-user totals — and on a real cluster (protobuf present)
-the TWS path is taken. The availability probe is importlib-based,
-not try/except-at-runtime, so the choice is made before any stream
-starts.
+Spark 4's `transformWithStateInPandas` would express the same state as
+a ValueState per user, but its Python worker needs `google.protobuf`
+at start, so it is not bound here: one tested binding, not two.
 
-Scale: state is O(users) fixed-width rows in the state store
-(RocksDB under TWS — spillable, incrementally checkpointed, so a
-billion-user running aggregate is bounded by disk not heap); each
+Scale: state is O(users) fixed-width rows in the state store; each
 batch costs one user-key exchange, identical to the batch groupBy's
 shuffle, amortized over the stream's life.
 """
 
 from __future__ import annotations
 
-import importlib.util
 from collections.abc import Iterator
 from typing import Any
 
@@ -49,19 +32,6 @@ from .daily import events_stream, stage_landing
 from .runner import _drain_to_batch_log
 
 OUTPUT_SCHEMA = "user_id long, n_events long, value_e2 long"
-_STATE_SCHEMA = "n long, s long"
-
-
-def tws_available() -> bool:
-    """True iff the transformWithState Python runtime can start: its
-    driver worker imports `google.protobuf` at handshake time and
-    crashes the stream when absent (STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE), so probe the import, not the API.
-    find_spec("google.protobuf") itself raises ModuleNotFoundError
-    when the parent namespace package is absent — probe that first."""
-    if importlib.util.find_spec("google") is None:
-        return False
-    return importlib.util.find_spec("google.protobuf") is not None
 
 
 def _source(spark: SparkSession, events_path: str) -> DataFrame:
@@ -81,51 +51,13 @@ def _source(spark: SparkSession, events_path: str) -> DataFrame:
     )
 
 
-def _tws_totals(src: DataFrame) -> DataFrame:
-    """The transformWithState binding (Spark 4 StatefulProcessor)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", _STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            n, s = 0, 0
-            if self._agg.exists():
-                prev = self._agg.get()
-                n, s = int(prev[0]), int(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                s += int(pdf["v_e2"].sum())
-            self._agg.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [int(key[0])], "n_events": [n], "value_e2": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def _apws_totals(src: DataFrame, n_buckets: int = 32) -> DataFrame:
-    """Fallback binding: identical state + emission semantics through
-    applyInPandasWithState — keyed by a user-hash BUCKET with per-user
-    state in parallel arrays (guide §4.2: one Python crossing per
-    (bucket, batch) instead of per user; the per-user form paid ~1500
-    crossings per batch at sf0.1 for a two-long add each). Emits the
-    post-batch totals for exactly the users present in the batch —
-    the same rows, batch by batch, as the per-user binding, so the
+    """Running totals through applyInPandasWithState, keyed by a
+    user-hash BUCKET with per-user state in parallel arrays: one Python
+    crossing per (bucket, batch) instead of per user (the per-user form
+    paid ~1500 crossings per batch at sf0.1 for a two-long add each).
+    Emits the post-batch totals for exactly the users present in the
+    batch — the same rows, batch by batch, as a per-user binding, so the
     max-struct collapse downstream is unchanged."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -192,14 +124,11 @@ def running_user_totals(spark: SparkSession, events_path: str) -> DataFrame:
     are not, so the collapse is exact whatever the micro-batch slicing
     was).
     """
-    use_tws = tws_available()
-    src = _source(spark, events_path)
-    out = _tws_totals(src) if use_tws else _apws_totals(src)
-
-    # TWS requires the RocksDB provider
     log = _drain_to_batch_log(
-        out, "update", scratch_dir("tws_emitted_"), OUTPUT_SCHEMA,
-        rocksdb=use_tws,
+        _apws_totals(_source(spark, events_path)),
+        "update",
+        scratch_dir("tws_emitted_"),
+        OUTPUT_SCHEMA,
     )
     # Collapse the update-mode log to each user's LATEST emitted row —
     # the row with the max n_events — via one max(struct) argmax.

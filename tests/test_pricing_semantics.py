@@ -455,22 +455,31 @@ def test_score_one_uncached_frames_stay_live(spark, tmp_path):
 
 
 def test_score_one_concurrent_first_calls_fill_maps_once(spark, monkeypatch):
+    """Concurrent first calls fill the lookup maps once and build the
+    projection's Columns once."""
     import sys
     import threading
+    import weakref
     from concurrent.futures import ThreadPoolExecutor
 
     from public_projet_data_engineering_tarification_electrique_spark.operators import (
         pricing,
     )
 
-    fills = []
-    collect = pricing._collect_lookups
+    fills, builds = [], []
+    collect, build = pricing._collect_lookups, pricing._projection_columns
 
     def counting(*args):
         fills.append(1)
         return collect(*args)
 
+    def counting_build():
+        builds.append(1)
+        return build()
+
     monkeypatch.setattr(pricing, "_collect_lookups", counting)
+    monkeypatch.setattr(pricing, "_projection_columns", counting_build)
+    monkeypatch.setattr(pricing, "_PROJECTIONS", weakref.WeakKeyDictionary())
     daily, annual = (f.cache() for f in _dims(spark))
     reqs = _requests_sample(seed=5, n=8)
     start = threading.Barrier(len(reqs))
@@ -489,7 +498,7 @@ def test_score_one_concurrent_first_calls_fill_maps_once(spark, monkeypatch):
         sys.setswitchinterval(interval)
         daily.unpersist()
         annual.unpersist()
-    assert len(fills) == 1
+    assert len(fills) == 1 and len(builds) == 1
     assert len(rows) == len(reqs) and all(r.status for r in rows)
 
 
@@ -516,3 +525,110 @@ def test_score_one_rejects_mistyped_field_like_create_dataframe(spark, nb_m2):
     daily, annual = _dims(spark)
     with pytest.raises(type(want.value)):
         score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
+
+
+def test_score_one_warm_call_builds_no_column(spark, monkeypatch):
+    """Once warm, ``score_one`` reuses the projection's Columns: with
+    ``F.col`` and ``F.when`` raising, every response still equals the
+    batch envelope's row."""
+    import pyspark.sql.functions
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        score_one,
+    )
+
+    daily, annual = (f.cache() for f in _dims(spark))
+    reqs = _requests_sample(seed=17, n=12)
+    try:
+        want = _batch_rows(spark, reqs, daily, annual)
+        score_one(spark, reqs[0], daily, annual, _RUN_DATE, _YEAR_N)
+
+        def no_column(*args, **kwargs):
+            raise AssertionError("a warm score_one built a Column")
+
+        monkeypatch.setattr(pyspark.sql.functions, "col", no_column)
+        monkeypatch.setattr(pyspark.sql.functions, "when", no_column)
+        for i, req in enumerate(reqs):
+            row = score_one(spark, req, daily, annual, _RUN_DATE, _YEAR_N)
+            assert row.asDict() == want[i], req
+    finally:
+        daily.unpersist()
+        annual.unpersist()
+
+
+def _with_columns_projection(scored):
+    """The projection as four ``withColumn`` calls, one per output
+    column: the shape the two-select projection must plan the same as."""
+    from public_projet_data_engineering_tarification_electrique_spark.functions.pricing import (
+        annual_price,
+        household_consumption_kwh,
+        m_factor,
+    )
+    from public_projet_data_engineering_tarification_electrique_spark.schemas import (
+        PRICING_REQUEST_REQUIRED,
+    )
+
+    missing = F.lit(False)
+    for c in sorted(PRICING_REQUEST_REQUIRED):
+        missing = missing | F.col(c).isNull()
+    return (
+        scored.withColumn(
+            "status",
+            F.when(missing, F.lit("missing_field"))
+            .when(F.col("conso30").isNull(), F.lit("unknown_region"))
+            .when(F.col("alpha").isNull(), F.lit("unknown_city"))
+            .otherwise(F.lit("ok")),
+        )
+        .withColumn(
+            "conso_foyer",
+            household_consumption_kwh(F.col("nb_m2"), F.col("nb_personne")),
+        )
+        .withColumn("m_factor", F.round(m_factor(F.col("conso30")), 6))
+        .withColumn(
+            "price",
+            F.when(
+                F.col("status") == "ok",
+                annual_price(
+                    F.col("alpha"), F.col("m_factor"), F.col("conso_foyer")
+                ),
+            ),
+        )
+    )
+
+
+def test_batch_projection_plans_like_four_with_columns(spark):
+    """``score_requests_with_status`` optimizes to the same plan as the
+    four-``withColumn`` projection over the same two-join frame (status
+    is computed once, not repeated inside price)."""
+    import re
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.pricing import (
+        city_alpha,
+        score_requests_with_status,
+    )
+
+    daily, annual = _dims(spark)
+    requests = spark.createDataFrame(
+        [("R1", "A", "1", 2, 50), ("R2", None, "2", 3, 80)],
+        "libelle_region string, nom_commune string, code_commune string, "
+        "nb_personne int, nb_m2 int",
+    )
+    joined = requests.join(
+        F.broadcast(region_trailing_avg(daily, _RUN_DATE)),
+        on="libelle_region",
+        how="left",
+    ).join(
+        F.broadcast(city_alpha(annual, _YEAR_N)),
+        on=["nom_commune", "code_commune"],
+        how="left",
+    )
+
+    def optimized(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+", "#", plan)
+
+    got = score_requests_with_status(requests, daily, annual, _RUN_DATE, _YEAR_N)
+    assert optimized(got) == optimized(_with_columns_projection(joined))
+    assert sorted(got.collect(), key=repr) == sorted(
+        _with_columns_projection(joined).collect(), key=repr
+    )

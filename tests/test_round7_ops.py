@@ -1,6 +1,6 @@
 """Unit tests for the round-7 operators: hashed-n-gram classifier,
 label propagation, dynamic-partition-pruning audit, source-grain
-MinHash, transformWithState running totals, pipe syntax, iterator
+MinHash, stateful running totals, pipe syntax, iterator
 Pandas UDF. Value-level oracle parity is covered for all of them by
 test_oracle_parity; these tests pin semantics and plan shape."""
 
@@ -134,14 +134,13 @@ def test_source_minhash_disjoint_sources(spark):
 
 
 def test_tws_fallback_equals_batch_totals(spark):
-    """running_user_totals (whichever binding the environment chose)
-    must equal the batch groupBy on the same grid."""
+    """running_user_totals must equal the batch groupBy on the same
+    grid."""
     from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
         load_table,
     )
     from public_projet_data_engineering_tarification_electrique_spark.streaming.stateful import (
         running_user_totals,
-        tws_available,
     )
 
     got = {
@@ -166,8 +165,6 @@ def test_tws_fallback_equals_batch_totals(spark):
         .collect()
     }
     assert got == expect
-    # informational: record which binding ran (both must pass the gate)
-    assert isinstance(tws_available(), bool)
 
 
 def test_weight_bias_bounds_scores():
