@@ -25,8 +25,11 @@ def tokens(text: Column) -> Column:
 def nonempty_tokens(text: Column) -> Column:
     """Whitespace tokens excluding empty strings — the ONE shared
     definition for every counting/chunking site, so the blank-doc
-    subtlety lives in one place."""
-    return F.filter(tokens(text), lambda t: t != "")
+    subtlety lives in one place. ``array_remove`` rather than a
+    lambda ``filter``: split never yields NULL elements, so the result
+    is the same, and a rebuilt plan carries no fresh lambda variable
+    name, so two builds of one query plan identically."""
+    return F.array_remove(tokens(text), "")
 
 
 def token_count(text: Column) -> Column:

@@ -920,34 +920,25 @@ def bpe_train_merges(
     """Iterative BPE tokenizer training (Sennrich et al., ACL'16) —
     the first `rounds` merges learned from the corpus, exactly: each
     round counts adjacent symbol pairs weighted by WORD FREQUENCY,
-    merges the (count desc, pair asc)-best pair greedily
-    left-to-right in every word, and recounts.
+    merges the (count desc, left asc, right asc)-best pair greedily
+    left-to-right without overlap in every word, and recounts. Training
+    stops early when no pair is left, so a corpus of short words yields
+    fewer than `rounds` rows.
 
-    Scale design — the reason BPE training is feasible on a 100 TB
-    corpus at all: the corpus-sized work is ONE (word) hash agg
-    building the frequency table; every merge round then runs on that
-    VOCAB-BOUNDED table (pair counting, the 1-row argmax, and the
-    merge rewrite), so per-round cost is |vocab|·max_word_len
-    regardless of corpus size — the same pre-aggregation every
+    Scale design: the corpus-sized work is ONE (word) hash agg in Spark
+    building the frequency table, the same pre-aggregation every
     production BPE trainer (sentencepiece, HF tokenizers) performs.
-    The 1-row winning pair attaches back by crossJoin broadcast (the
-    repo's scalar-attach pattern), and the vocab table is
-    localCheckpoint'd per round so the plan stays flat.
+    All merge rounds then run in ONE Python task over that
+    vocabulary-bounded table (a single-group ``applyInPandas``), so
+    the plan stays lazy and no round launches a job; per-round cost is
+    |vocab|·max_word_len regardless of corpus size. The word table
+    must fit one worker, which is the assumption those trainers make.
 
-    Cross-engine exactness: every symbol is WRAPPED as '|t|' (tokens
-    joined with '||': '|a||b||c|'), so the merge pattern '|L||R|' →
-    '|LR|' consumes no character shared with the NEXT potential match
-    — with that invariant, plain non-overlapping `replace` IS the
-    greedy left-to-right merge (with single delimiters, consecutive
-    matches share the middle '|' and replace skips mergeable pairs in
-    runs: '|a|a|a|a|' merged (a,a) would give [aa,a,a], not the
-    correct [aa,aa] — caught by the hypothesis model test). Spark's
-    and DuckDB's `replace` share the contract, so no fold/UDF is
-    needed and the oracle is bit-identical; pattern matches always
-    align to token boundaries because tokens never contain the
-    delimiter and a match's interior '||' can only map to an
-    inter-token separator. Ties break on (left, right) string order;
-    counts are exact longs.
+    Symbols are code points; Python's str order (code-point order) is
+    the UTF-8 byte order Spark and DuckDB compare strings by, so the
+    tie-break matches `bpe_merges_oracle_sql`. Tokens containing `sep`
+    are dropped, mirroring the oracle, whose `replace`-based merge
+    needs a delimiter no token carries. Counts are exact longs.
 
     Output: (round, left, right, merged, pair_count) — one row per
     learned merge, in training order.
@@ -956,92 +947,72 @@ def bpe_train_merges(
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     if len(sep) != 1:
         raise ValueError(f"sep must be one char, got {sep!r}")
-    chars = F.expr("transform(sequence(1, length(_w)), i -> substring(_w, i, 1))")
-    # The delimiter invariant REQUIRES that no token contains `sep` —
-    # a token carrying it would silently corrupt the symbol sequence
-    # identically in Spark and the DuckDB oracle (gate-blind). Enforce
-    # it by dropping such tokens, mirrored in bpe_merges_oracle_sql;
-    # the hypothesis model test generates '|' in its alphabet to pin
-    # the convention.
-    vocab = (
+    words = (
         ensure_parallelism(docs)
         .select(F.explode(nonempty_tokens(F.lower(F.col(text_col)))).alias("_w"))
         .filter(~F.contains(F.col("_w"), F.lit(sep)))
         .groupBy("_w")
         .agg(F.count("*").alias("freq"))
-        .select(
-            "freq",
-            F.concat(
-                F.lit(sep), F.concat_ws(sep + sep, chars), F.lit(sep)
-            ).alias("seq"),
-        )
-        .localCheckpoint(eager=True)
     )
-    esc = "\\" + sep  # regex-escape for split()
-    merge_rows = []
+    # one group, whose key carries `rounds` into the task
+    return words.groupBy(F.lit(rounds).alias("_rounds")).applyInPandas(
+        _bpe_rounds,
+        "round int, left string, right string, merged string, pair_count long",
+    )
+
+
+def _bpe_rounds(key, words):
+    """All merge rounds of `bpe_train_merges` over the (word, freq)
+    table, as one pandas fold."""
+    from collections import Counter
+
+    import pandas as pd
+
+    (rounds,) = key
+    freqs = dict(zip(words["_w"].tolist(), words["freq"].tolist()))
+    seqs = {w: list(w) for w in freqs}
+    merges = []
     for r in range(1, rounds + 1):
-        syms = F.filter(
-            F.split(F.col("seq"), esc), lambda x: x != F.lit("")
+        counts: Counter = Counter()
+        for w, f in freqs.items():
+            s = seqs[w]
+            for i in range(len(s) - 1):
+                counts[(s[i], s[i + 1])] += f
+        if not counts:
+            break
+        (left, right), cnt = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )
-        n = F.size(syms)
-        pairs = F.when(
-            n >= 2,
-            F.arrays_zip(
-                F.slice(syms, 1, n - 1).alias("l"),
-                F.slice(syms, 2, n - 1).alias("r"),
-            ),
-        )
-        counts = (
-            vocab.select("freq", F.explode(pairs).alias("_p"))
-            .groupBy(
-                F.col("_p.l").alias("left"), F.col("_p.r").alias("right")
-            )
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        top = (
-            counts.orderBy(
-                F.desc("pair_count"), F.asc("left"), F.asc("right")
-            )
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        merge_rows.append(
-            top.select(
-                F.lit(r).cast("int").alias("round"),
-                "left",
-                "right",
-                F.concat(F.col("left"), F.col("right")).alias("merged"),
-                F.col("pair_count").cast("long").alias("pair_count"),
-            )
-        )
-        vocab = (
-            vocab.join(F.broadcast(top))
-            .select(
-                "freq",
-                F.replace(
-                    F.col("seq"),
-                    F.concat(
-                        F.lit(sep), F.col("left"), F.lit(sep + sep),
-                        F.col("right"), F.lit(sep),
-                    ),
-                    F.concat(
-                        F.lit(sep), F.col("left"), F.col("right"), F.lit(sep)
-                    ),
-                ).alias("seq"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionByName(m)
-    return out
+        merges.append((r, left, right, left + right, cnt))
+        for w in seqs:
+            s, out, i = seqs[w], [], 0
+            while i < len(s):
+                if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
+                    out.append(left + right)
+                    i += 2
+                else:
+                    out.append(s[i])
+                    i += 1
+            seqs[w] = out
+    return pd.DataFrame(
+        merges, columns=["round", "left", "right", "merged", "pair_count"]
+    )
 
 
 def bpe_merges_oracle_sql(table: str = "documents", rounds: int = 3) -> str:
-    """DuckDB twin of bpe_train_merges — identical word-frequency
-    table, WRAPPED-token sequences ('|a||b|', see the operator's
-    delimiter invariant), pair counts, (count desc, pair asc) argmax,
-    and `replace`-based greedy merges, unrolled per round."""
+    """DuckDB twin of bpe_train_merges, written independently of its
+    Python fold: the same word-frequency table, pair counts and
+    (count desc, pair asc) argmax, with the greedy merge done by
+    `replace` on WRAPPED-token sequences, unrolled per round.
+
+    Every symbol is wrapped as '|t|' (tokens joined with '||':
+    '|a||b||c|'), so the pattern '|L||R|' → '|LR|' consumes no
+    character shared with the next potential match, and plain
+    non-overlapping `replace` IS the greedy left-to-right merge (with
+    single delimiters, '|a|a|a|a|' merged on (a,a) would give
+    [aa,a,a], not [aa,aa]). Matches align to token boundaries because
+    no token contains '|' (such tokens are dropped, as in the
+    operator)."""
     ctes = ["""
     tok AS (
       SELECT unnest(list_filter(string_split_regex(trim(lower(text)),

@@ -5430,9 +5430,9 @@ def q221_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE tokenizer training — the first 3 merges learned
     from the corpus (q145 is ONE round of the statistics; this is the
     actual training loop): per round, word-frequency-weighted adjacent
-    pair counts → deterministic argmax → greedy left-to-right merge
-    via `replace` on sep-delimited symbol strings. The corpus-sized
-    work is one (word) hash agg; every round is vocab-bounded — the
+    pair counts → deterministic argmax → greedy left-to-right merge.
+    The corpus-sized work is one (word) hash agg in Spark; all rounds
+    run in one pandas task over that vocab-bounded table — the
     pre-aggregation that makes BPE training feasible at 100 TB."""
     from ..operators.textstats import bpe_train_merges
 

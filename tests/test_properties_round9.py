@@ -6,8 +6,9 @@ model). One Spark job per example, tiny frames."""
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -51,10 +52,18 @@ def _qnorm_model(rows: list[tuple[str, float]]) -> dict[str, tuple]:
             i += cnt
         out[g] = (
             n_g,
-            round(val_sum / (n_g * 100.0), 4),
-            round(norm_sum / (n_g * 100.0), 4),
+            _round4(val_sum / (n_g * 100.0)),
+            _round4(norm_sum / (n_g * 100.0)),
         )
     return out
+
+
+def _round4(x: float) -> float:
+    """SQL ``round(x, 4)`` on a double, as Spark and DuckDB both do it:
+    half away from zero on the shortest decimal repr (−0.52625 →
+    −0.5263), where Python's ``round`` works on the binary value and
+    gives −0.5262."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
 
 @settings(max_examples=6, deadline=None)
@@ -68,6 +77,7 @@ def _qnorm_model(rows: list[tuple[str, float]]) -> dict[str, tuple]:
         max_size=30,
     )
 )
+@example(rows=[("a", -53)] * 7 + [("a", -50), ("c", 10)])  # mean −0.52625
 def test_quantile_normalize_matches_python_model(spark, rows):
     data = [(g, v / 100.0) for g, v in rows]
     df = spark.createDataFrame(data, "g string, value double")

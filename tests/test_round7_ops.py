@@ -313,6 +313,80 @@ def test_bpe_train_rejects_bad_params(spark):
         bpe_train_merges(docs, rounds=1, sep="||")
 
 
+def test_bpe_train_matches_duckdb_reference(spark):
+    """The Python fold against the independent DuckDB reference on a
+    handmade corpus: multi-byte words (é, ß, CJK), count ties, a token
+    holding the '|' delimiter, a blank and a NULL document, and more
+    rounds than the five merges there are to learn (the reference
+    unrolls one CTE per round and DuckDB's planning time doubles per
+    round, so the corpus stays small)."""
+    import duckdb
+    import pandas as pd
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.textstats import (
+        bpe_train_merges,
+        bpe_merges_oracle_sql,
+    )
+
+    rows = [
+        (1, "ÉTÉ été ße"),
+        (2, "東京 東京都 東京 a|b"),
+        (3, "   "),
+        (4, None),
+    ]
+    rounds = 6
+    got = [
+        tuple(r)
+        for r in bpe_train_merges(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            rounds=rounds,
+        )
+        .orderBy("round")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.register("corpus", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = [
+        tuple(r)
+        for r in con.execute(
+            f"SELECT * FROM ({bpe_merges_oracle_sql('corpus', rounds)}) "
+            "ORDER BY round"
+        ).fetchall()
+    ]
+    assert got == want
+    # ties break on code-point order: (t,é) before (é,t), and (ß,e)
+    # before (東京,都)
+    assert got == [
+        (1, "東", "京", "東京", 3),
+        (2, "t", "é", "té", 2),
+        (3, "é", "té", "été", 2),
+        (4, "ß", "e", "ße", 1),
+        (5, "東京", "都", "東京都", 1),
+    ]
+
+
+def test_bpe_train_builds_lazily_and_stably(spark):
+    """q221 builds with no Spark job, and two builds execute the same
+    plan once expression and plan ids are stripped."""
+    import re
+
+    from public_projet_data_engineering_tarification_electrique_spark.plans.registry import (
+        q221_bpe_train,
+    )
+
+    def plan(df):
+        text = df._jdf.queryExecution().executedPlan().toString()
+        return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+L?", "#", text))
+
+    first = plan(q221_bpe_train(spark, SF_SMOKE))  # reads the file footers
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None) or []
+    df = q221_bpe_train(spark, SF_SMOKE)
+    after = tracker.getJobIdsForGroup(None) or []
+    assert len(after) == len(before), "building q221 launched a job"
+    assert plan(df) == first
+
+
 def test_item_cooccurrence_cap_and_symmetry(spark):
     """Three users sharing items 1+2 -> cooc(1,2)=3 and cosine 1.0
     when each item's freq is 3; the per-user cap drops a hub user's
