@@ -12,12 +12,6 @@ pruning to rank 1. Equal timestamps match inclusively (right sorts
 before left via the side tag). Skew note: partitioning is by entity
 key, identical to what any per-entity time-series operator needs; AQE
 skew-split applies.
-
-KEYLESS calls (``on=()`` — level-table interval lookups, global event
-alignment) cannot partition by key; instead of one single-partition
-window they take a two-phase running-last (range exchange + P-row
-carry collect + partition-local window), P-way parallel — see
-``_keyless_running_last``.
 """
 
 from __future__ import annotations
@@ -26,80 +20,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
-
-
-def _keyless_running_last(
-    u: DataFrame, ts_order, descending: bool
-) -> DataFrame:
-    """Attach ``_m`` = the last non-null ``_asof`` payload in
-    (ts_order, _side) order, without a single-partition window.
-
-    The per-partition "last" is a ``max_by`` over a sort-faithful
-    integer key (``_ats`` negated for descending order, then
-    ``_side``); NULL keys — rows with no payload — are ignored by
-    max_by, so the collect carries exactly each partition's last-known
-    payload. The driver fold keeps the LATEST non-null across prior
-    partitions (range partitions are emitted in sort order). Bounded
-    driver data: one payload struct per partition.
-    """
-    spark = u.sparkSession
-    try:
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        p = spark.sparkContext.defaultParallelism
-    ranged = (
-        u.repartitionByRange(max(p, 1), ts_order, F.asc("_side"))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the collect below materializes
-    )
-    sign = -1 if descending else 1
-    ordkey = F.when(
-        F.col("_asof").isNotNull(),
-        F.struct(
-            (F.col("_ats") * sign).alias("k1"), F.col("_side").alias("k2")
-        ),
-    )
-    rows = (
-        ranged.groupBy("_pid")
-        .agg(F.max_by("_asof", ordkey).alias("_t"))
-        .collect()
-    )
-    totals = {r["_pid"]: r["_t"] for r in rows}
-    carry_rows = []
-    acc = None
-    for pid in sorted(totals):
-        carry_rows.append((pid, acc))
-        if totals[pid] is not None:
-            acc = totals[pid]
-    payload_type = ranged.schema["_asof"].dataType
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            carry_rows or [(0, None)],
-            StructType(
-                [
-                    StructField("_pid", IntegerType()),
-                    StructField("_carry", payload_type),
-                ]
-            ),
-        )
-    )
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(ts_order, F.asc("_side"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.join(offsets_df, on="_pid", how="left")
-        .withColumn(
-            "_m",
-            F.coalesce(
-                F.last("_asof", ignorenulls=True).over(local_w),
-                F.col("_carry"),
-            ),
-        )
-        .drop("_pid", "_carry")
-    )
 
 
 def asof_join(
@@ -120,11 +40,16 @@ def asof_join(
     ``right_ts >= left_ts``. Timestamps are integer-comparable (epoch
     seconds/nanos). ``tolerance`` (same unit) nulls out matches farther
     than the bound. Output: all left columns + ``right_prefix<c>`` for
-    each requested right column (null when no match).
+    each requested right column (null when no match). ``on`` must name
+    at least one key: with none, the window would funnel |L| + |R| rows
+    into one task (an interval lookup against a level table is a
+    ``banded_range_join`` or a ``shards`` scan instead).
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"unknown direction: {direction}")
     on = list(on)
+    if not on:
+        raise ValueError("asof_join needs at least one key column in `on`")
     payload = F.struct(
         F.col(right_ts).cast("long").alias("_rts"),
         *[F.col(c) for c in right_cols],
@@ -147,27 +72,14 @@ def asof_join(
     u = l.unionByName(r, allowMissingColumns=True)
 
     ts_order = F.asc("_ats") if direction == "backward" else F.desc("_ats")
-    if on:
-        w = (
-            Window.partitionBy(*on)
-            .orderBy(ts_order, F.asc("_side"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        matched = u.withColumn(
-            "_m", F.last("_asof", ignorenulls=True).over(w)
-        ).filter(F.col("_side") == 1)
-    else:
-        # KEYLESS as-of (level-table interval lookups, global event
-        # alignment): a window with no partition key would funnel
-        # |L|+|R| rows into one task — data-shaped, the q227-class
-        # wall. Two-phase instead: range-partition on the time order,
-        # compute each partition's LAST non-null payload (one P-row
-        # driver collect), fold driver-side into per-partition
-        # carry-ins, and merge a partition-LOCAL running last with the
-        # carry — exact, P-way parallel.
-        matched = _keyless_running_last(
-            u, ts_order, descending=(direction == "forward")
-        ).filter(F.col("_side") == 1)
+    w = (
+        Window.partitionBy(*on)
+        .orderBy(ts_order, F.asc("_side"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    matched = u.withColumn(
+        "_m", F.last("_asof", ignorenulls=True).over(w)
+    ).filter(F.col("_side") == 1)
     # a NULL-timestamp LEFT row has no defined "as of" point; whatever
     # the window happened to accumulate before it is not a match
     matched = matched.withColumn(

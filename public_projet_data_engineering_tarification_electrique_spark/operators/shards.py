@@ -1,32 +1,39 @@
-"""Distributed global ordering: row numbers, prefix sums, and
-size-capped sorted shards without a single-partition window (extension
-surface, BASELINE.json north star — the sorted-export last mile of a
-training pipeline).
+"""Distributed global ordering: row numbers, ntile, prefix sums,
+running maxima and size-capped sorted shards without a single-partition
+window (extension surface, BASELINE.json north star — the sorted-export
+last mile of a training pipeline).
 
 The naive global rank — ``row_number() OVER (ORDER BY ...)`` with no
 PARTITION BY — collapses the whole table into ONE task in Spark (the
 window needs a total order, so the exchange is SinglePartition). Fine
 at sf0.1, fatal at 100 TB. The scale-correct construction is the
-classic two-phase distributed scan:
+classic two-phase distributed scan, written ONCE here and shared by
+every global-order operator (the ones below and
+``timeseries.cusum_scan``; ``timeseries.ewma_scan`` reuses step 1):
 
-1. ``repartitionByRange`` on the sort key — partitions are
-   range-disjoint and ordered, P-way parallel.
-2. Partition-LOCAL ordering: ``sortWithinPartitions`` (no exchange)
-   plus the ``monotonically_increasing_id`` record-number bits for row
-   numbers — or, where a true running SUM is needed, a window
-   partitioned by the physical partition id (that one costs a second
-   hash exchange; the row-number path costs none).
-3. A bounded driver collect of per-partition aggregates (exactly P
-   rows — the only driver-side data, documented here as the bound)
-   turns into broadcast prefix offsets; local result + offset = exact
-   global result. The same machinery yields row numbers (offset =
-   prefix COUNT) and running sums (offset = prefix SUM).
+1. ``_ranged``: ``repartitionByRange`` on the sort key — partitions
+   are range-disjoint and ordered, P-way parallel — each row tagged
+   with its physical partition id ``_pid``. P is the session's
+   ``spark.sql.shuffle.partitions``, read when the plan is built.
+2. ``_carry_in``: a bounded driver collect of the operator's
+   per-partition aggregates (exactly P rows — the only driver-side
+   data, documented here as the bound), folded in ``_pid`` order into
+   each partition's carry-in and joined back as a broadcast table.
+3. The operator's partition-LOCAL part, merged with its carry: the
+   ``monotonically_increasing_id`` record-number bits for row numbers
+   (no exchange), or a window partitioned by ``_pid`` for running sums
+   and maxima (one hash exchange). Local result ⊕ carry = exact global
+   result; each operator brings only its aggregates, its fold (add,
+   vector add, NaN-aware max, cusum's (sum, prefix-min) pair) and its
+   local window.
 
-The ranged exchange is ``localCheckpoint``'d before step 2: Spark's
-range partitioner SAMPLES the data to pick bounds, and a recomputed
-exchange may sample differently between the offsets job and the final
-job — pinning the shuffle output makes the partition→offset mapping
-stable across both jobs (same reason dedup.py pins its CC iterations).
+The ranged exchange is ``localCheckpoint``'d LAZILY: Spark's range
+partitioner SAMPLES the data to pick bounds, and a recomputed exchange
+may sample differently between the carry collect and the final job —
+pinning the shuffle output makes the partition→carry mapping stable
+across both jobs (same reason dedup.py pins its CC iterations), and
+the carry collect is the action that materializes it (one job, not
+two).
 """
 
 from __future__ import annotations
@@ -35,63 +42,47 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _resolve_partitions(df: DataFrame, num_partitions: int | None) -> int:
+def _ranged(df: DataFrame, order_by: list[Column | str]) -> DataFrame:
+    """``df`` range-partitioned on ``order_by`` into P partitions,
+    tagged ``_pid`` and lazily pinned (see the module docstring)."""
     spark = df.sparkSession
-    if num_partitions is None:
-        # spark.sql.shuffle.partitions can be non-numeric on some
-        # platforms (e.g. "auto" under AQE-advisory configs) — fall
-        # back to the cluster's default parallelism rather than crash.
-        try:
-            p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            p = spark.sparkContext.defaultParallelism
-    else:
-        p = num_partitions
-    if p < 1:
-        raise ValueError(f"num_partitions must be positive, got {p}")
-    return p
-
-
-def _ranged_with_offsets(
-    df: DataFrame,
-    order_by: list[Column],
-    per_partition_total: Column,
-    num_partitions: int | None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Range-partition ``df`` on ``order_by`` (pinned), and build the
-    broadcast (pid → prefix total) table from a P-row driver collect of
-    ``per_partition_total`` per physical partition. Also returns the
-    grand total (the same collect already knows it — callers like
-    ``global_ntile`` need N without a second job)."""
-    p = _resolve_partitions(df, num_partitions)
-    # LAZY checkpoint: the offsets collect just below is the action
-    # that materializes it — same pinning of the sampled range bounds,
-    # one job instead of two.
-    ranged = (
+    # spark.sql.shuffle.partitions can be non-numeric on some platforms
+    # (e.g. "auto" under AQE-advisory configs) — fall back to the
+    # cluster's default parallelism rather than crash.
+    try:
+        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        p = spark.sparkContext.defaultParallelism
+    return (
         df.repartitionByRange(p, *order_by)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    # Bounded driver collect: exactly one row per partition (= p rows,
-    # thousands at cluster scale, never data-sized).
-    totals = {
-        r["_pid"]: r["_t"]
-        for r in ranged.groupBy("_pid")
-        .agg(per_partition_total.alias("_t"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid] or 0
-    offsets_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()] or [(0, 0)],
-            "_pid INT, _offset LONG",
-        )
-    )
-    return ranged, offsets_df, acc
+
+
+def _carry_in(
+    frame: DataFrame, partials: list[Column], fold, init: tuple, schema: str
+) -> tuple[DataFrame, tuple]:
+    """Join each partition's carry-in onto ``frame`` (a ``_ranged``
+    frame or a partition-local derivation of it).
+
+    ``partials`` are aggregated per ``_pid`` in one bounded driver
+    collect (exactly one row per non-empty partition). Walking the
+    partitions in ``_pid`` — range — order, a partition's carry is
+    ``init`` folded over the partials of every EARLIER partition with
+    ``fold(acc, partials) -> acc``; ``schema`` is the DDL of the carry
+    columns, one per slot of ``init``. Every row's ``_pid`` has a carry
+    (the pinned partitions are the ones collected); empty input gives
+    an empty carry table. Returns the joined frame and the fold over
+    ALL partitions (the grand total).
+    """
+    carries, acc = [], init
+    rows = frame.groupBy("_pid").agg(*partials).collect()
+    for pid, *partial in sorted(rows):
+        carries.append((pid, *acc))
+        acc = fold(acc, partial)
+    table = frame.sparkSession.createDataFrame(carries, "_pid INT, " + schema)
+    return frame.join(F.broadcast(table), "_pid", "left"), acc
 
 
 #: monotonically_increasing_id packs (partition id << 33) | record
@@ -115,11 +106,28 @@ def _local_row_number() -> Column:
     return F.monotonically_increasing_id().bitwiseAND(F.lit(_MID_LOW33)) + 1
 
 
+def _ranked(
+    df: DataFrame, order_by: list[Column], rank_col: str
+) -> tuple[DataFrame, int]:
+    """``global_row_number``'s frame plus the row count N (free: the
+    carry fold already summed it)."""
+    joined, (n,) = _carry_in(
+        _ranged(df, order_by),
+        [F.count("*")],
+        lambda acc, t: (acc[0] + t[0],),
+        (0,),
+        "_off LONG",
+    )
+    ranked = (
+        joined.sortWithinPartitions(*order_by)
+        .withColumn(rank_col, _local_row_number() + F.col("_off"))
+        .drop("_pid", "_off")
+    )
+    return ranked, n
+
+
 def global_row_number(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "global_rn",
-    num_partitions: int | None = None,
+    df: DataFrame, order_by: list[Column], rank_col: str = "global_rn"
 ) -> DataFrame:
     """Exact global row numbers under a total order, P-way parallel.
 
@@ -129,24 +137,13 @@ def global_row_number(
     make the numbering partition-dependent.
 
     Cost: ONE parallel shuffle (the range exchange) + a partition-local
-    sort + a P-row driver collect. The local row number comes from the
-    mid bit layout (see ``_local_row_number``), not a window — so no
-    second exchange on the partition id. The range exchange is
-    skew-bounded by the partitioner's equi-depth sampling.
+    sort + a P-row driver collect of per-partition counts. The local
+    row number comes from the mid bit layout (see
+    ``_local_row_number``), not a window — so no second exchange on the
+    partition id. The range exchange is skew-bounded by the
+    partitioner's equi-depth sampling.
     """
-    ranged, offsets_df, _ = _ranged_with_offsets(
-        df, order_by, F.count("*"), num_partitions
-    )
-    return (
-        ranged.sortWithinPartitions(*order_by)
-        .withColumn("_lrn", _local_row_number())
-        .join(offsets_df, on="_pid", how="left")
-        .withColumn(
-            rank_col,
-            (F.col("_lrn") + F.coalesce("_offset", F.lit(0))).cast("long"),
-        )
-        .drop("_pid", "_offset", "_lrn")
-    )
+    return _ranked(df, order_by, rank_col)[0]
 
 
 def global_ntile(
@@ -154,7 +151,6 @@ def global_ntile(
     order_by: list[Column],
     n_tiles: int,
     tile_col: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact ``NTILE(n) OVER (ORDER BY <total order>)`` without a
     single-partition window, P-way parallel.
@@ -164,56 +160,36 @@ def global_ntile(
     rest ``floor(N/n)`` (the ANSI/Spark/DuckDB tiling). So the
     two-phase distributed rank (``global_row_number``) plus one
     literal case-expression reproduces the unpartitioned window
-    bit-for-bit — and N is free, the offsets collect already summed
+    bit-for-bit — and N is free, the carry collect already summed
     it. Same total-order requirement as ``global_row_number``.
     """
     if n_tiles <= 0:
         raise ValueError(f"n_tiles must be positive, got {n_tiles}")
-    ranged, offsets_df, total = _ranged_with_offsets(
-        df, order_by, F.count("*"), num_partitions
-    )
+    ranked, total = _ranked(df, order_by, "_grn")
     q, r = divmod(total, n_tiles)
     cut = r * (q + 1)  # ranks 1..cut live in the (q+1)-sized tiles
     qs = max(q, 1)  # q == 0 ⇒ every rank ≤ cut; keep the div legal
-    return (
-        ranged.sortWithinPartitions(*order_by)
-        .withColumn("_lrn", _local_row_number())
-        .join(offsets_df, on="_pid", how="left")
-        .withColumn(
-            "_grn",
-            (F.col("_lrn") + F.coalesce("_offset", F.lit(0))).cast("long"),
-        )
-        .withColumn(
-            tile_col,
-            F.expr(
-                f"cast(case when _grn <= {cut} "
-                f"then (_grn - 1) div {q + 1} + 1 "
-                f"else {r} + (_grn - 1 - {cut}) div {qs} + 1 end as int)"
-            ),
-        )
-        .drop("_pid", "_offset", "_lrn", "_grn")
-    )
+    return ranked.withColumn(
+        tile_col,
+        F.expr(
+            f"cast(case when _grn <= {cut} "
+            f"then (_grn - 1) div {q + 1} + 1 "
+            f"else {r} + (_grn - 1 - {cut}) div {qs} + 1 end as int)"
+        ),
+    ).drop("_grn")
 
 
-def global_running_sum(
-    df: DataFrame,
-    order_by: list[Column],
-    value_col: str,
-    sum_col: str = "running_sum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact inclusive prefix sum of ``value_col`` under a total order
-    (``SUM(v) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)``), P-way
-    parallel — the distributed prefix-scan primitive behind byte-budget
-    sharding, curriculum token budgets, and quota cutoffs. Same
-    total-order requirement and two-shuffle cost as
-    ``global_row_number``; ``value_col`` must be integral (the prefix
-    offsets accumulate in exact long arithmetic — float prefix sums
-    would be partitioning-dependent).
-    """
-    return global_running_sums(
-        df, order_by, [value_col], [sum_col], num_partitions
-    )
+def _nan_max(acc: tuple, t: list) -> tuple:
+    """Running-max carry fold in Spark's ordering: NULL is skipped and
+    NaN is GREATER than every double, so the carry is partition-count
+    independent on NaN input (Python's max() is argument-order-dependent
+    on NaN)."""
+    a, b = acc[0], t[0]
+    if a is None or b is None:
+        return (b if a is None else a,)
+    if a != a or b != b:  # either side NaN → NaN wins
+        return (a if a != a else b,)
+    return (max(a, b),)
 
 
 def global_running_max(
@@ -222,59 +198,29 @@ def global_running_max(
     value_col: str,
     max_col: str = "running_max",
     exclusive: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact running MAX of ``value_col`` under a total order, P-way
-    parallel — the prefix-extreme twin of ``global_running_sum``
+    parallel — the prefix-extreme twin of ``global_running_sums``
     (staircase skylines, high-water marks). ``exclusive=True`` takes
     the max over STRICTLY-preceding rows (NULL for the global first
     row) — the Pareto-staircase frame.
 
-    Same two-phase construction: ranged exchange (pinned), a P-row
-    driver collect of per-partition maxima folded into per-partition
-    carry-ins (the max over all PRIOR partitions — direction-free,
+    The carry is the max over all PRIOR partitions (direction-free,
     because a partition's max does not depend on the sort direction
-    inside it), and a partition-local window merged null-safely with
-    the carry.
+    inside it), merged null-safely with a partition-local window.
     """
-    p = _resolve_partitions(df, num_partitions)
-    ranged = (
-        df.repartitionByRange(p, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the collect below materializes
-    )
-    rows = (
-        ranged.groupBy("_pid").agg(F.max(value_col).alias("_t")).collect()
-    )
-    totals = {r["_pid"]: r["_t"] for r in rows}
-    carry_rows = []
-    acc = None
-    for pid in sorted(totals):
-        carry_rows.append((pid, acc))
-        t = totals[pid]
-        if acc is None:
-            acc = t
-        elif t is not None:
-            # Spark's ordering (and therefore the partition-local
-            # F.max window below) treats NaN as GREATER than every
-            # double; Python's max() is argument-order-dependent on
-            # NaN. Mirror Spark so the carry is partition-count
-            # independent on NaN input.
-            if t != t or acc != acc:  # either side NaN → NaN wins
-                acc = t if t != t else acc
-            else:
-                acc = max(acc, t)
     vtype = df.schema[value_col].dataType.simpleString()
-    offsets_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            carry_rows or [(0, None)], f"_pid INT, _carry {vtype}"
-        )
+    joined, _ = _carry_in(
+        _ranged(df, order_by),
+        [F.max(value_col)],
+        _nan_max,
+        (None,),
+        f"_carry {vtype}",
     )
-    frame_end = -1 if exclusive else 0
     local_w = (
         Window.partitionBy("_pid")
         .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, frame_end)
+        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
     )
     local = F.max(value_col).over(local_w)
     merged = (
@@ -282,11 +228,7 @@ def global_running_max(
         .when(F.col("_carry").isNull(), local)
         .otherwise(F.greatest(local, F.col("_carry")))
     )
-    return (
-        ranged.join(offsets_df, on="_pid", how="left")
-        .withColumn(max_col, merged)
-        .drop("_pid", "_carry")
-    )
+    return joined.withColumn(max_col, merged).drop("_pid", "_carry")
 
 
 def global_running_sums(
@@ -294,20 +236,21 @@ def global_running_sums(
     order_by: list[Column],
     value_cols: list[str],
     sum_cols: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Exact inclusive prefix sums of SEVERAL integral columns under
-    one total order, sharing a single ranged exchange and a single
-    P-row driver collect — the multi-measure variant of
-    ``global_running_sum`` (a cumulative-distribution table wants
-    both a running count and a running positive-count; paying the
-    two-shuffle construction once per measure would double the cost
-    for no reason).
+    """Exact inclusive prefix sums (``SUM(v) OVER (ORDER BY … ROWS
+    UNBOUNDED PRECEDING)``) of one or more integral columns under one
+    total order, P-way parallel — the distributed prefix-scan behind
+    byte-budget sharding, cumulative-distribution tables and quota
+    cutoffs. All measures share one ranged exchange and one P-row
+    carry collect (a CDF table wants both a running count and a
+    running positive-count; paying the scan once per measure would
+    double the cost for no reason).
 
-    Same contract as the single-column form: ``order_by`` must be a
-    total order, values must be integral (offsets accumulate in exact
-    long arithmetic), and the cost is two P-way-parallel shuffles —
-    never a single-partition window.
+    ``order_by`` must be a total order, and values must be integral:
+    the carries accumulate in exact long arithmetic (float prefix sums
+    would be partitioning-dependent). Cost: two P-way-parallel
+    shuffles (the range exchange and the local window's ``_pid``
+    exchange) — never a single-partition window.
     """
     if not value_cols:
         raise ValueError("value_cols must be non-empty")
@@ -318,50 +261,26 @@ def global_running_sums(
             f"sum_cols ({len(sum_cols)}) must match value_cols "
             f"({len(value_cols)})"
         )
-    p = _resolve_partitions(df, num_partitions)
-    ranged = (
-        df.repartitionByRange(p, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the collect below materializes
-    )
-    # Bounded driver collect: one row per partition, all measures at
-    # once (p rows × k longs — never data-sized).
-    rows = (
-        ranged.groupBy("_pid")
-        .agg(
-            *[
-                F.sum(F.col(c).cast("long")).alias(f"_t{i}")
-                for i, c in enumerate(value_cols)
-            ]
-        )
-        .collect()
-    )
-    totals = {r["_pid"]: [r[f"_t{i}"] or 0 for i in range(len(value_cols))] for r in rows}
-    offset_rows = []
-    acc = [0] * len(value_cols)
-    for pid in sorted(totals):
-        offset_rows.append((pid, *acc))
-        acc = [a + t for a, t in zip(acc, totals[pid])]
-    off_names = [f"_off{i}" for i in range(len(value_cols))]
-    offsets_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            offset_rows or [(0, *([0] * len(value_cols)))],
-            "_pid INT, " + ", ".join(f"{n} LONG" for n in off_names),
-        )
+    values = [F.col(c).cast("long") for c in value_cols]
+    offs = [f"_off{i}" for i in range(len(value_cols))]
+    joined, _ = _carry_in(
+        _ranged(df, order_by),
+        [F.sum(v) for v in values],
+        lambda acc, t: tuple(a + (x or 0) for a, x in zip(acc, t)),
+        (0,) * len(values),
+        ", ".join(f"{o} LONG" for o in offs),
     )
     local_w = (
         Window.partitionBy("_pid")
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = ranged.join(offsets_df, on="_pid", how="left")
-    for vc, sc, on in zip(value_cols, sum_cols, off_names):
-        out = out.withColumn(
-            sc,
-            F.sum(F.col(vc).cast("long")).over(local_w)
-            + F.coalesce(on, F.lit(0)),
-        )
-    return out.drop("_pid", *off_names)
+    return joined.withColumns(
+        {
+            sc: F.sum(v).over(local_w) + F.col(o)
+            for v, o, sc in zip(values, offs, sum_cols)
+        }
+    ).drop("_pid", *offs)
 
 
 def sorted_shards(
@@ -406,7 +325,7 @@ def byte_budget_shards(
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
-    summed = global_running_sum(df, order_by, size_col, sum_col=sum_col)
+    summed = global_running_sums(df, order_by, [size_col], [sum_col])
     return summed.withColumn(
         shard_col,
         F.expr(

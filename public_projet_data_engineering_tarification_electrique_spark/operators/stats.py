@@ -762,7 +762,7 @@ def weighted_percentiles(
 
     Plan shape: one (group, value) hash agg collapses the corpus to
     the level table; ONE keyless ranged prefix sum over (group, value)
-    order (``shards.global_running_sum`` — groups with millions of
+    order (``shards.global_running_sums`` — groups with millions of
     levels never serialize through a per-group window task, the
     q227/q228 lesson); per-group start offsets fold a ≤|groups|-row
     collect on the driver (exact long arithmetic; UTF-8 byte order ==
@@ -770,15 +770,15 @@ def weighted_percentiles(
     range ordering); then one filtered argmin per requested
     percentile. Output: (group, w_total, wp<p> ...) scaled back /100.
     """
-    from .shards import global_running_sum
+    from .shards import global_running_sums
 
     level = df.groupBy(
         F.col(by).alias("_g"), F.col(value_cents_col).alias("_vc")
     ).agg(F.sum(F.col(weight_col).cast("long")).alias("_w")).localCheckpoint(
         eager=False
     )
-    cum = global_running_sum(
-        level, [F.asc("_g"), F.asc("_vc")], "_w", "_cw"
+    cum = global_running_sums(
+        level, [F.asc("_g"), F.asc("_vc")], ["_w"], ["_cw"]
     )
     # per-group start offsets: a ≤|groups|-row collect folded on the
     # driver in exact longs (groups are an enum — flags, languages,

@@ -1012,14 +1012,19 @@ def bpe_merges_oracle_sql(table: str = "documents", rounds: int = 3) -> str:
     single delimiters, '|a|a|a|a|' merged on (a,a) would give
     [aa,a,a], not [aa,aa]). Matches align to token boundaries because
     no token contains '|' (such tokens are dropped, as in the
-    operator)."""
+    operator).
+
+    Every CTE is MATERIALIZED: round r's sequences feed both round
+    r+1's pair counts and its merge, so an inlined plan re-expands the
+    whole chain at each reference and planning time grows
+    geometrically with the round count."""
     ctes = ["""
-    tok AS (
+    tok AS MATERIALIZED (
       SELECT unnest(list_filter(string_split_regex(trim(lower(text)),
                                                    '\\s+'),
                     x -> x <> '' AND NOT contains(x, '|'))) AS w
       FROM {table}
-    ), v0 AS (
+    ), v0 AS MATERIALIZED (
       SELECT freq,
              '|' || array_to_string(
                list_transform(range(1, length(w) + 1),
@@ -1029,7 +1034,7 @@ def bpe_merges_oracle_sql(table: str = "documents", rounds: int = 3) -> str:
     )""".format(table=table)]
     for r in range(1, rounds + 1):
         ctes.append(f"""
-    p{r} AS (
+    p{r} AS MATERIALIZED (
       SELECT l, r, cast(sum(freq) AS BIGINT) AS pair_count
       FROM (
         SELECT freq, unnest(s[1:-2]) AS l, unnest(s[2:-1]) AS r
@@ -1038,10 +1043,10 @@ def bpe_merges_oracle_sql(table: str = "documents", rounds: int = 3) -> str:
               FROM v{r - 1})
         WHERE len(s) >= 2
       ) GROUP BY 1, 2
-    ), t{r} AS (
+    ), t{r} AS MATERIALIZED (
       SELECT l, r, pair_count FROM p{r}
       ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
-    ), v{r} AS (
+    ), v{r} AS MATERIALIZED (
       SELECT freq,
              replace(seq, '|' || l || '||' || r || '|',
                           '|' || l || r || '|') AS seq

@@ -213,7 +213,6 @@ def ewma_scan(
     value_col: str,
     alpha: float = 0.3,
     ewma_col: str = "ewma",
-    num_partitions: int | None = None,
     max_replay: int = 100_000,
 ) -> DataFrame:
     """KEYLESS quantized-EWMA prefix scan under a total order, P-way
@@ -229,10 +228,10 @@ def ewma_scan(
 
     Why the obvious two-phase split fails, and what this does instead:
     a running SUM splits into segment partials + additive carries
-    (shards.global_running_sum), but EWMA's affine carries reassociate
+    (shards.global_running_sums), but EWMA's affine carries reassociate
     float ops — the composed carry differs from the sequential fold in
     the last ulp, so the result would be partitioning-dependent
-    (exactly why global_running_sum is integer-only). The quantized
+    (exactly why global_running_sums is integer-only). The quantized
     recurrence restores exactness through CONTRACTION: (1−α) < 1
     forgets the entry state geometrically, and once forgetting crosses
     the quantization grid the tail state is provably independent of
@@ -244,10 +243,14 @@ def ewma_scan(
     states (replaying the rare non-converged partition from its
     returned values — bounded by ``max_replay``, raised past it), and
     phase 2 re-folds each partition from its exact carry, emitting
-    every row. One ranged exchange + one P-row collect, both
-    Arrow-batched passes over the localCheckpoint'd partitions; the
-    sequential core is irreducible (it IS the operator), but each
-    partition folds independently — P-way wall-clock at any length.
+    every row. The ranged, lazily pinned partitions come from
+    ``shards._ranged`` (P is the session's
+    ``spark.sql.shuffle.partitions``); the carry chain is this
+    operator's own, because a certified tail is not an aggregate. One
+    ranged exchange + one P-row collect, both Arrow-batched passes over
+    the pinned partitions; the sequential core is irreducible (it IS
+    the operator), but each partition folds independently — P-way
+    wall-clock at any length.
 
     ``order_by`` must be a TOTAL order (ties would make any engine's
     answer ill-defined). NULL values are dropped. Returns the input
@@ -255,23 +258,21 @@ def ewma_scan(
     """
     if not (0.0 < alpha < 1.0):
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
-    from .shards import _resolve_partitions
+    from .shards import _ranged
 
     comp = 1.0 - alpha
-    p = _resolve_partitions(df, num_partitions)
     data = df.filter(F.col(value_col).isNotNull())
     # NaN is not NULL: one NaN would poison every later state AND
     # defeat the interval-convergence certificate (NaN == NaN is
     # false) — drop it like NULL for float inputs
     if df.schema[value_col].dataType.simpleString() in ("double", "float"):
         data = data.filter(~F.isnan(value_col))
-    ranged = (
-        data.repartitionByRange(p, *order_by)
-        .sortWithinPartitions(*order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_vq", F.round(F.col(value_col) + 1e-9, 4))
-        .localCheckpoint(eager=False)
+    ranged = _ranged(
+        data.withColumn("_vq", F.round(F.col(value_col) + 1e-9, 4)), order_by
     )
+    # both folds walk each partition in order; the pinned rows are
+    # sorted locally (no exchange) under each of them
+    ordered = ranged.sortWithinPartitions(*order_by)
     mm = ranged.agg(
         F.min("_vq").alias("lo"), F.max("_vq").alias("hi")
     ).first()
@@ -328,7 +329,7 @@ def ewma_scan(
             }
         )
 
-    phase1 = ranged.mapInPandas(
+    phase1 = ordered.mapInPandas(
         tails,
         "_pid int, _n long, _tail double, _conv boolean, _vals array<double>",
     ).collect()
@@ -366,7 +367,7 @@ def ewma_scan(
         f"`{f.name}` {f.dataType.simpleString()}"
         for f in data.schema.fields
     )
-    return ranged.mapInPandas(replay, f"{fields}, {ewma_col} double")
+    return ordered.mapInPandas(replay, f"{fields}, {ewma_col} double")
 
 
 def holt_daily(
@@ -543,7 +544,6 @@ def cusum_scan(
     order_by_cols: list[str],
     d_col: str,
     threshold: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """CUSUM change detection over the ENTIRE stream in total order:
     S_t = max(0, S_{t−1} + d_t), alarms where S_t > threshold — the
@@ -553,54 +553,44 @@ def cusum_scan(
     interval carries), CUSUM distributes EXACTLY by the reflection
     identity  S_t = D_t − min(0, min_{j≤t} D_j)  with D the running
     sum of the integral deviations d_t: both prefix quantities come
-    from ONE ranged exchange + partition-local windows, and the
-    cross-partition carry is a P-row driver fold over (partition sum,
-    partition prefix-min) pairs — the q227 shards pattern, fused so
-    the sum and the min share the exchange (the q225 lesson: two
-    primitives ordering by the same key must not pay two exchanges).
-    Everything is exact long arithmetic: ``d_col`` must be integral
-    (pre-scale floats to a cents grid), so S is bit-stable under any
-    partitioning — pinned by a property test across 1–16 partitions.
+    from partition-local windows over ONE ranged exchange, and the
+    cross-partition carry folds the P (partition sum, partition
+    prefix-min) pairs — ``shards._carry_in``, the two-phase scan every
+    global-order operator shares, with the sum and the min sharing the
+    exchange (the q225 lesson: two primitives ordering by the same key
+    must not pay two exchanges). P is the session's
+    ``spark.sql.shuffle.partitions``. Everything is exact long
+    arithmetic: ``d_col`` must be integral (pre-scale floats to a
+    cents grid), so S is bit-stable under any partitioning — pinned by
+    a property test across 1–16 partitions.
 
     Output: 1 row (n_rows, n_alarms, max_s, final_s), all exact longs.
     """
-    from .shards import _resolve_partitions
+    from .shards import _carry_in, _ranged
 
-    p = _resolve_partitions(df, num_partitions)
     order_by = [F.asc(c) for c in order_by_cols]
-    ranged = (
-        df.repartitionByRange(p, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the collect below materializes
-    )
+    d = F.col(d_col).cast("long")
     w = (
         Window.partitionBy("_pid")
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = ranged.withColumn(
-        "_ls", F.sum(F.col(d_col).cast("long")).over(w)
-    ).withColumn("_lm", F.min("_ls").over(w))
-    rows = (
-        local.groupBy("_pid")
-        .agg(
-            F.sum(F.col(d_col).cast("long")).alias("_tot"),
-            F.min("_ls").alias("_pmin"),
-        )
-        .collect()
+    local = (
+        _ranged(df, order_by)
+        .withColumn("_ls", F.sum(d).over(w))
+        .withColumn("_lm", F.min("_ls").over(w))
     )
-    carries = []
-    run, gmin = 0, 0  # D_0 = 0: the empty prefix is always a reset point
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        carries.append((r["_pid"], run, gmin))
-        gmin = min(gmin, run + (r["_pmin"] if r["_pmin"] is not None else 0))
-        run += r["_tot"] or 0
-    carry = F.broadcast(
-        df.sparkSession.createDataFrame(
-            carries or [(0, 0, 0)], "_pid INT, _off LONG, _minc LONG"
-        )
+
+    def fold(acc, t):
+        # acc = (D before the partition, min of D so far); D_0 = 0:
+        # the empty prefix is always a reset point
+        run, gmin = acc
+        return run + (t[0] or 0), min(gmin, run + (t[1] or 0))
+
+    scored, _ = _carry_in(
+        local, [F.sum(d), F.min("_ls")], fold, (0, 0), "_off LONG, _minc LONG"
     )
-    scored = local.join(carry, "_pid", "left").withColumn(
+    scored = scored.withColumn(
         "_s",
         (F.col("_off") + F.col("_ls"))
         - F.least(F.col("_minc"), F.col("_off") + F.col("_lm")),

@@ -4426,9 +4426,9 @@ def q157_byte_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-budgeted export shards over the globally sorted corpus —
     the volume-bounded sibling of q154's count-capped shards (uploader
     part-size limits, per-chunk token budgets). The exclusive prefix
-    sum comes from ``operators.shards.global_running_sum``: the same
-    range-partition + pid-local window + broadcast-prefix-offset
-    machinery as the distributed row number, i.e. a distributed prefix
+    sum comes from ``operators.shards.global_running_sums``: the same
+    range-partition + broadcast-carry scan as the distributed row
+    number, with a pid-local window, i.e. a distributed prefix
     SCAN with no single-partition exchange anywhere; shard membership
     is ⌊prefix_bytes / budget⌋ in exact long arithmetic. Output per
     shard: doc count, char volume, boundary doc ids — all integers."""

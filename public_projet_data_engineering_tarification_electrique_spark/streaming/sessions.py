@@ -9,17 +9,17 @@ end (emitted immediately) or when the event-time watermark passes
 declares "no earlier event can still arrive", so results equal the
 batch operator on the closed prefix).
 
-Scale design: state per key is ONE fixed-width row (open-session
-aggregate + next session number) — after a timeout the row shrinks to
-a numbering tombstone rather than being removed, so session ids stay
+Scale design: state is one row per user-hash bucket, holding each
+user's fixed-width entry (open-session aggregate + next session
+number) in parallel arrays — after a timeout the entry shrinks to a
+numbering tombstone rather than being removed, so session ids stay
 globally 1..k per user across incremental runs (the price is one tiny
-row per user EVER seen, the same footprint as any per-user aggregate).
-Memory is O(users), and the shuffle is the same single user-key
-exchange the batch twin pays. Arrow moves each group into pandas in
-one batch; WITHIN a group the gap scan is a per-event Python loop
-(sessions are inherently sequential per user; vectorizing the
-boundary detection via diff/cumsum is the known optimization if hot
-keys ever dominate).
+entry per user EVER seen, the same footprint as any per-user
+aggregate). Memory is O(users), and the shuffle is a single exchange
+on the bucket key. Arrow moves each bucket into pandas in one batch;
+WITHIN a user the gap scan is a per-event Python loop (sessions are
+inherently sequential per user; vectorizing the boundary detection via
+diff/cumsum is the known optimization if hot keys ever dominate).
 """
 
 from __future__ import annotations
@@ -47,14 +47,6 @@ OUTPUT_SCHEMA = (
     "user_id long, session_id long, n_events long, "
     "start_s long, end_s long, sum_value double"
 )
-#: (next_session_id, open?, start_s, end_s, n_events, sum_v4)
-#: sum_v4 is the running session sum on the 1e-4 integer grid (long), so
-#: the accumulated total is order-independent and bit-identical to the
-#: batch twin's exact-grid sum regardless of micro-batch boundaries.
-STATE_SCHEMA = (
-    "next_sid long, open boolean, start_s long, end_s long, "
-    "n_events long, sum_v4 long"
-)
 
 
 def _grid4(x: float) -> int:
@@ -73,108 +65,19 @@ def _grid4(x: float) -> int:
     return int(r) if g >= 0 else -int(r)
 
 
-def _make_sessionizer(gap_seconds: int):
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            next_sid, is_open, start_s, end_s, n_events, sum_v4 = state.get
-        else:
-            next_sid, is_open, start_s, end_s, n_events, sum_v4 = (
-                1, False, 0, 0, 0, 0,
-            )
-        closed: list[tuple[int, int, int, int, int, int]] = []
-
-        if state.hasTimedOut:
-            # watermark passed end+gap: the open session can no longer
-            # grow — emit it, and keep a NUMBERING TOMBSTONE instead of
-            # removing state: dropping it would restart the user's
-            # session ids at 1 on their next event (duplicate
-            # (user, session_id) keys, divergence from the batch twin's
-            # 1..k numbering). No timeout is re-armed on the tombstone.
-            # a timeout is only ever armed while a session is OPEN and
-            # the tombstone path never re-arms one, so is_open holds
-            # here by construction (no defensive else: re-writing the
-            # tombstone would just obscure that invariant)
-            closed.append(
-                (user_id, next_sid, n_events, start_s, end_s, sum_v4)
-            )
-            state.update((next_sid + 1, False, 0, 0, 0, 0))
-        else:
-            frames = [p for p in pdfs if len(p)]
-            rows = (
-                pd.concat(frames, ignore_index=True).sort_values(
-                    ["ts_s", "event_id"], kind="mergesort"
-                )
-                if frames
-                else pd.DataFrame(columns=["ts_s", "event_id", "value"])
-            )
-            for ts_s, value in zip(rows["ts_s"], rows["value"]):
-                ts_s = int(ts_s)
-                # NULL values arrive as NaN: the batch twin's
-                # sum(round(value·1e4)) skips nulls while count(*)
-                # still counts the row — mirror that, instead of
-                # letting math.floor(nan) kill the worker. (Known
-                # edge: an ALL-null session emits 0.0 here vs the
-                # batch twin's NULL sum.)
-                v = float(value)
-                v4 = 0 if math.isnan(v) else _grid4(v)
-                if is_open and ts_s - end_s > gap_seconds:
-                    closed.append(
-                        (user_id, next_sid, n_events, start_s, end_s, sum_v4)
-                    )
-                    next_sid += 1
-                    is_open = False
-                if is_open:
-                    end_s = max(end_s, ts_s)
-                    n_events += 1
-                    sum_v4 += v4
-                else:
-                    is_open = True
-                    start_s = end_s = ts_s
-                    n_events = 1
-                    sum_v4 = v4
-            state.update(
-                (next_sid, is_open, start_s, end_s, n_events, sum_v4)
-            )
-            if is_open:
-                # timeout is event-time: fires once watermark > end+gap.
-                # Clamped one ms past the current watermark: ts_s is
-                # second-truncated while the watermark is ms-precision,
-                # so for tiny gaps (end+gap)*1000 can land BELOW the
-                # watermark and PySpark rejects the timestamp (killing
-                # the stream). The clamp fires the timeout on the next
-                # micro-batch instead — such a session is already
-                # un-growable, so emission timing is all that shifts.
-                t_ms = (end_s + gap_seconds) * 1000
-                wm_ms = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(t_ms, wm_ms + 1))
-
-        if closed:
-            out = pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id", "session_id", "n_events",
-                    "start_s", "end_s", "sum_value",
-                ],
-            )
-            # off the integer grid exactly once, at emission
-            out["sum_value"] = out["sum_value"].astype("float64") / 1e4
-            yield out
-
-    return update
-
-
 #: Bucketed state row: per-user state rides PARALLEL ARRAYS inside one
 #: row per user-hash bucket — one Python crossing per (bucket, batch)
 #: instead of one per user (guide §4.2; the q120 cogroup lesson applied
-#: to applyInPandasWithState: at sf0.1 the per-user operator paid
+#: to applyInPandasWithState: at sf0.1 a per-user state key paid
 #: ~3000 Arrow crossings per run — 1500 users × data batch + timeout
-#: batch — for microseconds of real work each). ``t_ms`` stores each
-#: open session's ARMED event-time timeout (the per-user operator's
-#: setTimeoutTimestamp value, clamp included), so the bucket sweep
-#: applies Spark's own fire predicate (armed < watermark) per user.
+#: batch — for microseconds of real work each). Per user:
+#: (next_session_id, open?, start_s, end_s, n_events, sum_v4, t_ms).
+#: sum_v4 is the running session sum on the 1e-4 integer grid (long),
+#: so the accumulated total is order-independent and bit-identical to
+#: the batch twin's exact-grid sum regardless of micro-batch
+#: boundaries. ``t_ms`` is each open session's ARMED event-time
+#: timeout (clamp included), so the bucket sweep applies Spark's own
+#: fire predicate (armed < watermark) per user.
 BUCKET_STATE_SCHEMA = (
     "users array<long>, next_sid array<long>, open array<boolean>, "
     "start_s array<long>, end_s array<long>, n_events array<long>, "
@@ -183,39 +86,39 @@ BUCKET_STATE_SCHEMA = (
 
 
 def _make_bucket_sessionizer(gap_seconds: int):
-    """Bucket-state twin of :func:`_make_sessionizer` — identical
-    per-user semantics (the same fold, numbering tombstones, and
-    timeout predicate), amortized Python boundary.
-
-    Equivalence vs the per-user operator, piece by piece:
+    """applyInPandasWithState update over one user-hash bucket: each
+    user in the bucket gets the semantics of its own state key under
+    Spark's event-time timeout, at one Python crossing per (bucket,
+    batch).
 
     - **Data path.** Rows sort by (user, ts_s, event_id) and fold per
-      user with the VERBATIM per-user loop — emissions and end-state
-      per user are identical to the per-user group call.
+      user: an event more than ``gap_seconds`` after the open
+      session's end closes it (emitted immediately) and opens the next.
     - **Timeout sweep.** A bucket's timeout call closes exactly the
-      users whose own per-user timer would have fired: armed
-      ``t_ms < watermark`` (strict — Spark's fire predicate, and the
-      q28 oracle's ``(end+gap)*1000 < wm_ms``). ``t_ms`` is stored per
-      user at arm time with the per-user clamp
-      ``max((end+gap)*1000, wm+1)`` applied, so the sweep predicate is
-      bit-identical to what the per-user operator armed.
+      users whose own timer has fired: armed ``t_ms < watermark``
+      (strict — Spark's fire predicate, and the q28 oracle's
+      ``(end+gap)*1000 < wm_ms``).
+    - **Numbering tombstone.** A closed-by-timeout user keeps an entry
+      with ``next_sid + 1`` instead of being removed: dropping it would
+      restart the user's session ids at 1 on their next event
+      (duplicate (user, session_id) keys, divergence from the batch
+      twin's 1..k numbering). No timer is armed on a tombstone.
     - **Sweep inside the data path.** When the bucket receives data,
       Spark gives it no timeout call even though OTHER users in the
-      bucket (without data this batch) may hold expired timers — the
-      per-user operator would fire those keys this same batch, so the
-      data path sweeps expired users first. For a user with BOTH an
-      expired open session and new data the sweep closes what the gap
-      rule would close anyway: a surviving (non-late) event has
+      bucket (without data this batch) may hold expired timers —
+      their own timers would fire this same batch, so the data path
+      sweeps expired users first. For a user with BOTH an expired open
+      session and new data the sweep closes what the gap rule would
+      close anyway: a surviving (non-late) event has
       ts·1000 ≥ wm > (end+gap)·1000, i.e. lies beyond the gap — an
       event within the gap would be late and dropped by the watermark
       filter before the operator. Either path emits the same session
       with the same id.
     - **Re-arm.** The bucket timer is min over open users' ``t_ms``
       (clamped past the current watermark): it fires no later than the
-      earliest per-user timer, and each firing closes exactly the
-      expired users — emission CONTENT matches; only the batch id an
-      emission lands under can shift, which the cumulative read-back
-      erases.
+      earliest user timer, and each firing closes exactly the expired
+      users — emission CONTENT matches; only the batch id an emission
+      lands under can shift, which the cumulative read-back erases.
     """
 
     def update(
@@ -255,9 +158,14 @@ def _make_bucket_sessionizer(gap_seconds: int):
                     uu = int(uu) if pd.notna(uu) else None
                     s = st.get(uu) or [1, False, 0, 0, 0, 0, 0]
                     next_sid, is_open, start_s, end_s, n_events, sum_v4 = s[:6]
-                    # the per-user fold, verbatim from _make_sessionizer
                     for ts_s, value in zip(grp["ts_s"], grp["value"]):
                         ts_s = int(ts_s)
+                        # NULL values arrive as NaN: the batch twin's
+                        # sum(round(value·1e4)) skips nulls while
+                        # count(*) still counts the row — mirror that,
+                        # instead of letting math.floor(nan) kill the
+                        # worker. (Known edge: an ALL-null session
+                        # emits 0.0 here vs the batch twin's NULL sum.)
                         v = float(value)
                         v4 = 0 if math.isnan(v) else _grid4(v)
                         if is_open and ts_s - end_s > gap_seconds:
@@ -275,6 +183,15 @@ def _make_bucket_sessionizer(gap_seconds: int):
                             start_s = end_s = ts_s
                             n_events = 1
                             sum_v4 = v4
+                    # the event-time timeout fires once watermark >
+                    # end+gap. Clamped one ms past the current
+                    # watermark: ts_s is second-truncated while the
+                    # watermark is ms-precision, so for tiny gaps
+                    # (end+gap)*1000 can land BELOW the watermark, and
+                    # PySpark rejects such a timestamp (killing the
+                    # stream). The clamp fires the timeout on the next
+                    # micro-batch instead — such a session is already
+                    # un-growable, so emission timing is all that shifts.
                     t_ms = (
                         max((end_s + gap_seconds) * 1000, wm_ms + 1)
                         if is_open
@@ -413,13 +330,9 @@ def stream_sessionize(
         .withWatermark("_et", "0 seconds")
     )
     # xxhash64 skips NULL inputs and returns its seed (42), so NULL users
-    # land in bucket pmod(42, n_buckets) beside real users (the coalesce
-    # never fires); the sessionizer's groupby(dropna=False) keeps them
-    # apart.
-    bucket = F.coalesce(
-        F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets))),
-        F.lit(-1),
-    ).cast("long")
+    # land in bucket pmod(42, n_buckets) beside real users; the
+    # sessionizer's groupby(dropna=False) keeps them apart.
+    bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets)))
     # applyInPandasWithState resolves grouping keys against the child's
     # output — materialize the bucket as a column first
     src = src.withColumn("_bucket", bucket)

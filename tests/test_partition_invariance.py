@@ -1,7 +1,10 @@
 """Answers do not depend on the shuffle partition count: a sample of
 queries (α lead, batch pricing, the TPC-H join, the status envelope)
 returns the same rows with ``spark.sql.shuffle.partitions`` at 4 and
-at 13."""
+at 13. So does each operator of the ranged carry-scan family
+(``operators/shards.py``), whose partition count P is that session
+setting: count/ntile (q72), running sums (q227), running max (q224),
+cusum (q266) and the EWMA scan (q245)."""
 
 from __future__ import annotations
 
@@ -24,6 +27,11 @@ from .conftest import SF_SMOKE
         "q09_price_batch",
         "q60_tpch_shipping_priority",
         "q94_price_batch_status",
+        "q72_value_quartile_bands",
+        "q227_exact_auc",
+        "q224_pareto_frontier",
+        "q266_cusum_scan",
+        "q245_ewma_scan",
     ],
 )
 def test_rows_do_not_depend_on_shuffle_partitions(spark, name):

@@ -21,6 +21,9 @@ from public_projet_data_engineering_tarification_electrique_spark.operators.stat
 from public_projet_data_engineering_tarification_electrique_spark.operators.timeseries import (
     ewma_daily,
 )
+from public_projet_data_engineering_tarification_electrique_spark.operators.util import (
+    scoped_conf,
+)
 
 _vals = st.floats(
     min_value=-100, max_value=100, allow_nan=False, allow_infinity=False
@@ -215,15 +218,16 @@ def test_ewma_scan_bitexact_and_partition_invariant(spark, vals, parts):
         ewma_scan,
     )
 
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(vals)], "rn long, value double"
-    )
-    got = {
-        r["rn"]: r["ewma"]
-        for r in ewma_scan(
-            df, ["rn"], "value", alpha=0.3, num_partitions=parts
-        ).collect()
-    }
+    # rows arrive out of order, so each ranged partition must be
+    # sorted by the scan itself
+    rows = [(i, float(v)) for i, v in enumerate(vals)]
+    rows.reverse()
+    df = spark.createDataFrame(rows, "rn long, value double")
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", parts):
+        got = {
+            r["rn"]: r["ewma"]
+            for r in ewma_scan(df, ["rn"], "value", alpha=0.3).collect()
+        }
     want = _ewma_scan_model(vals)
     assert len(got) == len(want)
     for i, w in enumerate(want):
@@ -242,10 +246,11 @@ def test_ewma_scan_tiny_partitions_hit_replay_path(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "rn long, value double"
     )
-    got = {
-        r["rn"]: r["ewma"]
-        for r in ewma_scan(df, ["rn"], "value", num_partitions=8).collect()
-    }
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
+        got = {
+            r["rn"]: r["ewma"]
+            for r in ewma_scan(df, ["rn"], "value").collect()
+        }
     want = _ewma_scan_model(vals)
     assert [got[i] for i in range(len(vals))] == want
 
@@ -258,7 +263,8 @@ def test_ewma_scan_nulls_dropped_and_replay_cap(spark):
     df = spark.createDataFrame(
         [(0, 10.0), (1, None), (2, 20.0)], "rn long, value double"
     )
-    rows = ewma_scan(df, ["rn"], "value", num_partitions=1).collect()
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 1):
+        rows = ewma_scan(df, ["rn"], "value").collect()
     assert [r["rn"] for r in sorted(rows, key=lambda r: r["rn"])] == [0, 2]
     assert sorted(r["ewma"] for r in rows) == _ewma_scan_model([10.0, 20.0])
 
@@ -269,7 +275,8 @@ def test_ewma_scan_nulls_dropped_and_replay_cap(spark):
         "rn long, value double",
     )
     with _pytest.raises(Exception, match="did not converge"):
-        ewma_scan(wide, ["rn"], "value", num_partitions=1, max_replay=5).collect()
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", 1):
+            ewma_scan(wide, ["rn"], "value", max_replay=5).collect()
 
 
 def _mi_model(pairs):
@@ -549,12 +556,11 @@ def test_ewma_scan_exact_across_alphas(spark, alpha, parts):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "rn long, value double"
     )
-    got = {
-        r["rn"]: r["ewma"]
-        for r in ewma_scan(
-            df, ["rn"], "value", alpha=alpha, num_partitions=parts
-        ).collect()
-    }
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", parts):
+        got = {
+            r["rn"]: r["ewma"]
+            for r in ewma_scan(df, ["rn"], "value", alpha=alpha).collect()
+        }
     comp = 1.0 - alpha
     s = 0.0
     for i, x in enumerate(vals):

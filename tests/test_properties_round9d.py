@@ -874,6 +874,9 @@ def test_interval_coverage_drops_empty_and_inverted_spans(spark):
 from public_projet_data_engineering_tarification_electrique_spark.operators.timeseries import (
     cusum_scan,
 )
+from public_projet_data_engineering_tarification_electrique_spark.operators.util import (
+    scoped_conf,
+)
 
 
 def _cusum_model(ds, h):
@@ -899,8 +902,8 @@ def test_cusum_matches_sequential_model_at_any_partitioning(
 ):
     rows = [(i, d) for i, d in enumerate(ds)]
     df = spark.createDataFrame(rows, "i long, d long").repartition(parts)
-    r = cusum_scan(df, ["i"], "d", threshold=h, num_partitions=parts)
-    got = r.collect()[0]
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", parts):
+        got = cusum_scan(df, ["i"], "d", threshold=h).collect()[0]
     n, alarms, mx, fin = _cusum_model(ds, h)
     assert (
         got["n_rows"],

@@ -315,11 +315,11 @@ def test_bpe_train_rejects_bad_params(spark):
 
 def test_bpe_train_matches_duckdb_reference(spark):
     """The Python fold against the independent DuckDB reference on a
-    handmade corpus: multi-byte words (é, ß, CJK), count ties, a token
-    holding the '|' delimiter, a blank and a NULL document, and more
-    rounds than the five merges there are to learn (the reference
-    unrolls one CTE per round and DuckDB's planning time doubles per
-    round, so the corpus stays small)."""
+    handmade corpus: multi-byte words (é, ß, CJK), count ties, merges
+    of merged symbols, a token holding the '|' delimiter, a blank and
+    a NULL document, and more rounds than the 14 merges there are to
+    learn (the reference unrolls one materialized CTE chain per
+    round; inlined, DuckDB's planning time doubled per round)."""
     import duckdb
     import pandas as pd
 
@@ -333,8 +333,9 @@ def test_bpe_train_matches_duckdb_reference(spark):
         (2, "東京 東京都 東京 a|b"),
         (3, "   "),
         (4, None),
+        (5, "banana bandana cabana"),
     ]
-    rounds = 6
+    rounds = 16
     got = [
         tuple(r)
         for r in bpe_train_merges(
@@ -354,14 +355,24 @@ def test_bpe_train_matches_duckdb_reference(spark):
         ).fetchall()
     ]
     assert got == want
-    # ties break on code-point order: (t,é) before (é,t), and (ß,e)
-    # before (東京,都)
+    # ties break on code-point order: (an,a) before (東,京), (b,an)
+    # before (t,é) before (é,t), and among the count-1 pairs ASCII
+    # before (ß,e) before (東京,都)
     assert got == [
-        (1, "東", "京", "東京", 3),
-        (2, "t", "é", "té", 2),
-        (3, "é", "té", "été", 2),
-        (4, "ß", "e", "ße", 1),
-        (5, "東京", "都", "東京都", 1),
+        (1, "a", "n", "an", 5),
+        (2, "an", "a", "ana", 3),
+        (3, "東", "京", "東京", 3),
+        (4, "b", "an", "ban", 2),
+        (5, "t", "é", "té", 2),
+        (6, "é", "té", "été", 2),
+        (7, "a", "b", "ab", 1),
+        (8, "ab", "ana", "abana", 1),
+        (9, "ban", "ana", "banana", 1),
+        (10, "ban", "d", "band", 1),
+        (11, "band", "ana", "bandana", 1),
+        (12, "c", "abana", "cabana", 1),
+        (13, "ß", "e", "ße", 1),
+        (14, "東京", "都", "東京都", 1),
     ]
 
 

@@ -78,6 +78,13 @@ def test_asof_forward_and_tolerance(spark):
         right_cols=("event_id",), direction="forward", tolerance=100,
     ).collect()[0]
     assert tight.asof_event_id is None  # 400 > tolerance 100
+    import pytest
+
+    with pytest.raises(ValueError, match="key column"):
+        asof_join(
+            left, right, on=(), left_ts="ts", right_ts="ts",
+            right_cols=("event_id",),
+        )
 
 
 def test_ivf_topk_self_is_rank1(spark):

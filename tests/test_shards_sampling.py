@@ -12,6 +12,9 @@ from public_projet_data_engineering_tarification_electrique_spark.operators.shar
     global_row_number,
     sorted_shards,
 )
+from public_projet_data_engineering_tarification_electrique_spark.operators.util import (
+    scoped_conf,
+)
 
 
 def _docs(spark, n=237, parts=7):
@@ -34,13 +37,14 @@ def test_global_row_number_is_exact_permutation(spark):
 
 def test_global_row_number_stable_under_repartition(spark):
     df = _docs(spark)
-    a = global_row_number(df, [F.desc("w"), F.asc("doc_id")], num_partitions=3)
-    b = global_row_number(
-        df.repartition(13), [F.desc("w"), F.asc("doc_id")], num_partitions=9
-    )
-    assert sorted(map(tuple, a.select("doc_id", "global_rn").collect())) == sorted(
-        map(tuple, b.select("doc_id", "global_rn").collect())
-    )
+    order = [F.desc("w"), F.asc("doc_id")]
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 3):
+        a = global_row_number(df, order).select("doc_id", "global_rn")
+        a = a.collect()
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 9):
+        b = global_row_number(df.repartition(13), order)
+        b = b.select("doc_id", "global_rn").collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_sorted_shards_exactly_full_except_last(spark):
@@ -170,24 +174,25 @@ def test_sorted_shards_integer_div_and_bloom_k_bounds(spark):
 def test_global_running_sum_matches_serial_cumsum(spark):
     from public_projet_data_engineering_tarification_electrique_spark.operators.shards import (
         byte_budget_shards,
-        global_running_sum,
+        global_running_sums,
     )
 
     df = _docs(spark)
-    out = global_running_sum(
-        df, [F.desc("w"), F.asc("doc_id")], "w", num_partitions=5
-    ).orderBy(F.desc("w"), F.asc("doc_id"))
-    rows = out.collect()
+    order = [F.desc("w"), F.asc("doc_id")]
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 5):
+        out = global_running_sums(df, order, ["w"], ["running_sum"])
+        rows = out.orderBy(*order).collect()
     acc = 0
     for r in rows:
         acc += r["w"]
         assert r["running_sum"] == acc
     # repartition invariance: membership is a pure function of the data
-    again = global_running_sum(
-        df.repartition(13), [F.desc("w"), F.asc("doc_id")], "w", num_partitions=9
-    )
-    assert sorted(map(tuple, again.select("doc_id", "running_sum").collect())) == sorted(
-        map(tuple, out.select("doc_id", "running_sum").collect())
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 9):
+        again = global_running_sums(
+            df.repartition(13), order, ["w"], ["running_sum"]
+        ).select("doc_id", "running_sum").collect()
+    assert sorted(map(tuple, again)) == sorted(
+        (r["doc_id"], r["running_sum"]) for r in rows
     )
     # byte-budget shards: every shard's EXCLUSIVE start offset lies in
     # [shard*budget, (shard+1)*budget) — first-fit-in-order semantics
@@ -209,11 +214,12 @@ def test_global_ntile_matches_unpartitioned_ntile(spark):
     df = _docs(spark)  # 237 rows, tied w values
     for n in (1, 4, 5, 237, 500):  # incl. n > N (each row its own tile)
         order = [F.desc("w"), F.asc("doc_id")]
-        got = dict(
-            global_ntile(df, order, n, tile_col="t", num_partitions=5)
-            .select("doc_id", "t")
-            .collect()
-        )
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", 5):
+            got = dict(
+                global_ntile(df, order, n, tile_col="t")
+                .select("doc_id", "t")
+                .collect()
+            )
         want = dict(
             df.select(
                 "doc_id", F.ntile(n).over(Window.orderBy(*order)).alias("t")
@@ -244,18 +250,17 @@ def test_global_running_sums_multi_matches_two_windows(spark):
 
     df = _docs(spark).withColumn("v2", (F.col("doc_id") % 7).cast("long"))
     order = [F.desc("w"), F.asc("doc_id")]
-    got = global_running_sums(
-        df, order, ["w", "v2"], ["rs_w", "rs_v2"], num_partitions=5
-    )
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 5):
+        got = global_running_sums(
+            df, order, ["w", "v2"], ["rs_w", "rs_v2"]
+        ).select("doc_id", "rs_w", "rs_v2").collect()
     w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     want = df.select(
         "doc_id",
         F.sum("w").over(w).alias("rs_w"),
         F.sum("v2").over(w).alias("rs_v2"),
     )
-    assert sorted(
-        map(tuple, got.select("doc_id", "rs_w", "rs_v2").collect())
-    ) == sorted(map(tuple, want.collect()))
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want.collect()))
 
 
 def test_global_running_sums_validates_inputs(spark):
@@ -320,13 +325,12 @@ def test_global_running_max_matches_window(spark):
     val = (F.col("doc_id") * 31 % 17).cast("long")
     df = df.withColumn("v", val)
     for exclusive in (False, True):
-        got = dict(
-            global_running_max(
-                df, order, "v", "rm", exclusive=exclusive, num_partitions=5
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", 5):
+            got = dict(
+                global_running_max(df, order, "v", "rm", exclusive=exclusive)
+                .select("doc_id", "rm")
+                .collect()
             )
-            .select("doc_id", "rm")
-            .collect()
-        )
         end = -1 if exclusive else 0
         w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, end)
         want = dict(
@@ -358,12 +362,11 @@ def test_global_running_max_nan_matches_spark_ordering(spark):
         for r in df.select("i", F.max("v").over(w).alias("rm")).collect()
     }
     for p in (1, 3, 7):
-        got = {
-            r["i"]: r["rm"]
-            for r in global_running_max(
-                df, order, "v", "rm", num_partitions=p
-            ).collect()
-        }
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", p):
+            got = {
+                r["i"]: r["rm"]
+                for r in global_running_max(df, order, "v", "rm").collect()
+            }
         assert set(got) == set(want)
         for k in want:
             same = (got[k] == want[k]) or (
@@ -372,52 +375,6 @@ def test_global_running_max_nan_matches_spark_ordering(spark):
             assert same, f"p={p}, i={k}: {got[k]} != {want[k]}"
     # once NaN enters, the running max stays NaN (Spark's ordering)
     assert math.isnan(want[5]) and math.isnan(want[23])
-
-
-def test_keyless_asof_matches_keyed_window_semantics(spark):
-    """The keyless (on=()) as-of branch — two-phase running last — must
-    reproduce the naive unpartitioned-window result exactly, both
-    directions, including no-match NULLs and tolerance nulling."""
-    from public_projet_data_engineering_tarification_electrique_spark.operators.asof import (
-        asof_join,
-    )
-
-    left = spark.createDataFrame(
-        [(i, i * 10) for i in range(40)] + [(99, None)],
-        "lid long, lts long",
-    )
-    right = spark.createDataFrame(
-        [(j, j * 37 % 400, f"p{j}") for j in range(25)],
-        "rid long, rts long, payload string",
-    )
-
-    def naive(direction):
-        rows = right.collect()
-        out = {}
-        for lrow in left.collect():
-            lts = lrow["lts"]
-            if lts is None:
-                out[lrow["lid"]] = None
-                continue
-            if direction == "backward":
-                cands = [r for r in rows if r["rts"] <= lts]
-                best = max(cands, key=lambda r: r["rts"]) if cands else None
-            else:
-                cands = [r for r in rows if r["rts"] >= lts]
-                best = min(cands, key=lambda r: r["rts"]) if cands else None
-            out[lrow["lid"]] = best["payload"] if best else None
-        return out
-
-    for direction in ("backward", "forward"):
-        got = dict(
-            asof_join(
-                left, right, on=(), left_ts="lts", right_ts="rts",
-                right_cols=("payload",), direction=direction,
-            )
-            .select("lid", "asof_payload")
-            .collect()
-        )
-        assert got == naive(direction), direction
 
 
 def test_sorted_layout_audit_zorder_wins_on_grid(spark):

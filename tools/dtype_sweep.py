@@ -30,11 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from public_projet_data_engineering_tarification_electrique_spark import get_spark  # noqa: E402
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (  # noqa: E402
+    TESTDATA_TABLES,
+)
 
 
 def main() -> int:
@@ -47,7 +45,7 @@ def main() -> int:
     )
     spark = get_spark(app_name="dtype_sweep")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"

@@ -26,18 +26,16 @@ import duckdb
 
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
+    TESTDATA_TABLES,
+)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="gate-latency")
     duck = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             duck.sql(

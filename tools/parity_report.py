@@ -27,11 +27,9 @@ import duckdb
 
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
+    TESTDATA_TABLES,
+)
 
 
 def main() -> None:
@@ -41,7 +39,7 @@ def main() -> None:
 
     spark = get_spark(app_name="parity-report")
     duck = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             duck.sql(

@@ -26,11 +26,9 @@ import duckdb
 from oracle_utils import compare
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
+    TESTDATA_TABLES,
+)
 
 
 def main() -> None:
@@ -75,7 +73,7 @@ def main() -> None:
     spark = get_spark(app_name="parity-some")
     for sf_dir in sf_dirs:
         duck = duckdb.connect()
-        for t in TABLES:
+        for t in TESTDATA_TABLES:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
                 duck.sql(
