@@ -25,9 +25,12 @@ surface:
 - :func:`merge_write` — the SINK: applies the merge against a
   bucket-partitioned parquet state dir and rewrites ONLY the buckets
   the source touches (static isin pruning from a ≤ n_buckets driver
-  list + dynamic partition overwrite — the batch twin of
-  streaming/upsert._merge_batch), optionally appending the batch's
-  change data feed from the same join. The merge is a pure function of
+  list + dynamic partition overwrite), optionally appending the
+  batch's change data feed from the same join. Batch callers and the
+  streaming upsert's foreachBatch (streaming/upsert) both write
+  through it. Inside the sink a NULL key is ONE key (null-safe
+  match): a later NULL-key row replaces the earlier one, as GROUP BY
+  treats NULL. The merge is a pure function of
   (state, batch), so a replay is idempotent exactly when the
   ``update_set`` is last-write-wins (columns taken from the source);
   an ADDITIVE update expression (e.g. ``n + src("n")``) re-applies on
@@ -55,22 +58,38 @@ def src(col: str) -> Column:
 
 
 def _merge_join(
-    target: DataFrame, source: DataFrame, keys: list[str]
+    target: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    null_safe: bool = False,
 ) -> DataFrame:
     """The ONE full-outer join every merge surface projects from:
     target columns by name, source value columns under the ``_src_``
-    prefix, plus ``_t_present``/``_s_present`` match flags."""
-    s = source.select(
-        *[F.col(k) for k in keys],
-        *[
-            F.col(c).alias(_SRC + c)
-            for c in source.columns
-            if c not in keys
-        ],
-        F.lit(True).alias("_s_present"),
-    )
+    prefix, plus ``_t_present``/``_s_present`` match flags.
+
+    Keys compare by SQL equality, so a NULL key never matches (the
+    ANSI MERGE contract of :func:`merge_into`/:func:`merge_changes`);
+    ``null_safe`` compares with ``<=>`` instead, so NULL matches NULL
+    (:func:`merge_write`'s contract)."""
+    values = [
+        F.col(c).alias(_SRC + c) for c in source.columns if c not in keys
+    ]
+    present = F.lit(True).alias("_s_present")
     t = target.withColumn("_t_present", F.lit(True))
-    return t.join(s, on=keys, how="full_outer")
+    if not null_safe:
+        s = source.select(*[F.col(k) for k in keys], *values, present)
+        return t.join(s, on=keys, how="full_outer")
+    # a USING join only compares with `=`: join on `<=>` with the
+    # source keys renamed, then merge each key pair as USING does
+    s = source.select(
+        *[F.col(k).alias(_SRC + k) for k in keys], *values, present
+    )
+    on = [F.col(k).eqNullSafe(F.col(_SRC + k)) for k in keys]
+    return t.join(s, on=on, how="full_outer").select(
+        *[F.coalesce(k, _SRC + k).alias(k) for k in keys],
+        *[c for c in t.columns if c not in keys],
+        *s.columns[len(keys):],
+    )
 
 
 class MergeProjections:
@@ -359,12 +378,18 @@ def merge_write(
     a key always lives in the same file group and the per-batch scan
     is O(affected buckets), not O(table). ``state_schema`` is the DDL
     of the state WITHOUT the ``_bucket`` column (declared schema read,
-    never inference — same discipline as streaming/upsert); an empty
-    frame of it stands in for a fresh state. The layout is
-    self-describing: the first write persists (n_buckets, keys, hash
-    fn) to a ``_bucket_layout.json`` marker and every later batch
-    asserts against it — re-running with a different n_buckets raises
-    instead of silently mis-pruning.
+    never inference); an empty frame of it stands in for a fresh
+    state. The layout is self-describing: the first write persists
+    (n_buckets, keys, hash fn) to a ``_bucket_layout.json`` marker and
+    every later batch asserts against it — re-running with a different
+    n_buckets raises instead of silently mis-pruning.
+
+    NULL keys match null-safe here, unlike :func:`merge_into`: a
+    stored table holds at most one row per key, and a NULL key is one
+    key (it hashes to one bucket, ``pmod(42, n_buckets)``, since
+    xxhash64 returns its seed for NULL). Under ANSI equality a NULL-key
+    row could never be updated or deleted, and every batch would add
+    another.
     """
     from .util import (
         bucket_layout_guard,
@@ -434,7 +459,7 @@ def merge_write(
         # when there is one (lazy), else right here (eager).
         n_out = max(len(affected) if affected else int(n_buckets), 1)
         joined = (
-            _merge_join(target, batch.drop("_bucket"), keys)
+            _merge_join(target, batch.drop("_bucket"), keys, null_safe=True)
             .withColumn("_bucket", bucket)
             .repartition(n_out, "_bucket")
             .localCheckpoint(eager=changelog_dir is None)

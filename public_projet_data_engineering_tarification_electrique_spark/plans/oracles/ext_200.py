@@ -959,22 +959,37 @@ ORACLE_SQL["q244_gram_matrix"] = """
 """
 
 # q245: the oracle replays the identical fixed-point recurrence
-# sequentially — list_prepend(0.0) makes list_reduce start from the
-# zero init, and each step is the same (α·x + (1−α)·s, +1e-9, round 4)
-# on 1e-4-grid rationals, so every intermediate state is the same
-# double on both engines regardless of Spark's partitioning.
+# sequentially — the prepended zero struct makes list_reduce start from
+# the zero init, and each step is the same (α·x + (1−α)·s, +1e-9,
+# round 4) on 1e-4-grid rationals, so every intermediate state is the
+# same double on both engines regardless of Spark's partitioning. The
+# fold carries (d = running sum of round(s·1e4), s = state); list
+# elements share the accumulator's struct type, x holding the input.
+# Field order matters on DuckDB 1.0.0: with s built before d, d reads a
+# wrong acc.s (sf0.01 digest off by 192124), so d comes first. This
+# form matches a Python sequential replay at sf0.001, sf0.01 and sf0.1.
 ORACLE_SQL["q245_ewma_scan"] = """
     WITH d AS (
       SELECT epoch_us(ts) AS us, event_id, round(value + 1e-9, 4) AS v
       FROM events WHERE value IS NOT NULL
+    ), f AS (
+      SELECT cast(count(*) AS BIGINT) AS n_rows,
+             list_reduce(
+               list_prepend(
+                 {'d': CAST(0 AS BIGINT), 's': CAST(0 AS DOUBLE),
+                  'x': CAST(0 AS DOUBLE)},
+                 list({'d': CAST(0 AS BIGINT), 's': CAST(0 AS DOUBLE),
+                       'x': v} ORDER BY us, event_id)),
+               (acc, e) -> {
+                 'd': acc.d + CAST(round(
+                   round(0.3 * e.x + 0.7 * acc.s + 1e-9, 4) * 10000)
+                   AS BIGINT),
+                 's': round(0.3 * e.x + 0.7 * acc.s + 1e-9, 4),
+                 'x': CAST(0 AS DOUBLE)}
+             ) AS r
+      FROM d
     )
-    SELECT cast(count(*) AS BIGINT) AS n_rows,
-           list_reduce(
-             list_prepend(CAST(0 AS DOUBLE),
-                          list(v ORDER BY us, event_id)),
-             (acc, x) -> round(0.3 * x + 0.7 * acc + 1e-9, 4)
-           ) AS ewma_final
-    FROM d
+    SELECT n_rows, r.s AS ewma_final, r.d AS ewma_digest FROM f
 """
 
 # q246: identical integer-count algebra — one (x, y) cell agg,

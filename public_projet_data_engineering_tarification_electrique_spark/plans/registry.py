@@ -2880,11 +2880,12 @@ def q115_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q116_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming keyed upsert (MERGE INTO for a stream): update-mode
     per-user argmax aggregation → foreachBatch keyed MERGE into a
-    bucket-partitioned parquet state table (anti-join + union per
-    affected bucket, dynamic partition overwrite — the Delta/Iceberg
-    MERGE plan on plain parquet). With availableNow over the finite
-    landing dir, final state ≡ the batch per-user latest — exact SQL
-    oracle. (ts, event_id) is a total order, so the pick is
+    bucket-partitioned parquet state table through merge_write (one
+    full-outer join per affected bucket set, dynamic partition
+    overwrite — the Delta/Iceberg MERGE plan on plain parquet). With
+    availableNow over the finite landing dir, final state ≡ the batch
+    per-user latest — exact SQL oracle, NULL users one group as in its
+    PARTITION BY. (ts, event_id) is a total order, so the pick is
     deterministic."""
     from ..streaming.upsert import stream_upsert_latest
 
@@ -5920,9 +5921,12 @@ def q245_ewma_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase with contraction-certified interval carries (see
     operators/timeseries.ewma_scan): one ranged exchange, one P-row
     collect, every row's smoothed value exact on the 1e-4 grid at any
-    partitioning. Output summarizes the trajectory (n_rows + final
-    state); the final state depends on every row in order, so the
-    oracle's sequential list_reduce replay checks the whole fold."""
+    partitioning. Output summarizes the trajectory: n_rows, the final
+    state, and ``ewma_digest``, the exact long sum of every row's state
+    in 1e-4 units. Contraction makes the final state forget early
+    rows, so a wrong partition carry-in can leave it intact; the digest
+    counts every row's state, so the oracle's sequential list_reduce
+    replay checks the whole trajectory."""
     from ..operators.timeseries import ewma_scan
 
     ev = load_table(spark, sf_dir, "events", raw=True).select(
@@ -5934,7 +5938,12 @@ def q245_ewma_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .select(F.col("ewma").alias("ewma_final"))
     )
-    cnt = scanned.agg(F.count("*").cast("long").alias("n_rows"))
+    cnt = scanned.agg(
+        F.count("*").cast("long").alias("n_rows"),
+        F.sum(F.round(F.col("ewma") * 1e4).cast("long")).alias(
+            "ewma_digest"
+        ),
+    )
     return cnt.crossJoin(final)
 
 

@@ -109,7 +109,6 @@ def stream_cdc_changelog(
     spark: SparkSession,
     orders: DataFrame,
     epoch_cuts: tuple[str, ...] = ("1996-01-01", "1997-06-01"),
-    n_buckets: int = 8,
 ) -> DataFrame:
     """Run the CDC stream to completion (availableNow, one epoch file
     per trigger) and return the changelog summary: one row per
@@ -178,7 +177,6 @@ def stream_cdc_changelog(
             batch,
             ["custkey"],
             STATE_SCHEMA,
-            n_buckets=n_buckets,
             batch_id=int(bid),
             changelog_dir=changelog,
             projections=proj,

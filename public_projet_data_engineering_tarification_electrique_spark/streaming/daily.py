@@ -206,8 +206,7 @@ def stream_daily_ingest(
     # Hadoop FileSystem API, not os.path: the guard must fire for ANY
     # scheme the path resolves to (file://, hdfs://, s3a://, …) — an
     # os.listdir check silently fails OPEN on distributed storage,
-    # which is exactly where a production out_path lives (same
-    # rationale as upsert._state_exists).
+    # which is exactly where a production out_path lives.
     fs, out_hpath = hadoop_fs(spark, out_path)
     if fs.exists(out_hpath) and any(
         status.getPath().getName().startswith("part-")

@@ -29,13 +29,20 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.util import hadoop_fs, scoped_conf, scratch_dir
 
 #: shuffle partitions (= state stores) of every stateful stream
 STATE_PARTITIONS = 8
+
+#: user-hash buckets of the bucket-keyed pandas-state streams. A
+#: constant, not a session value: the bucket is the state's grouping
+#: key, so the count is frozen into the checkpoint, and a checkpoint
+#: resumed under another count would read the wrong state.
+STATE_BUCKETS = 32
 
 _PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 #: spillable, incrementally checkpointed state: the HDFS-backed default
@@ -44,6 +51,14 @@ _ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
+
+
+def _user_bucket() -> Column:
+    """The grouping key of the bucket-keyed state streams,
+    ``pmod(xxhash64(user_id), STATE_BUCKETS)``. xxhash64 skips NULL
+    inputs and returns its seed (42), so NULL users land in bucket
+    ``pmod(42, STATE_BUCKETS)`` beside real users."""
+    return F.pmod(F.xxhash64(F.col("user_id")), F.lit(STATE_BUCKETS))
 
 
 def _drain(

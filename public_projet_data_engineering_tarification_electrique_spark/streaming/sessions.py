@@ -40,7 +40,7 @@ from .daily import (
     stage_landing,
     stage_landing_under_checkpoint,
 )
-from .runner import _drain_to_batch_log
+from .runner import _drain_to_batch_log, _user_bucket
 from ..operators.util import hadoop_fs, scratch_dir
 
 OUTPUT_SCHEMA = (
@@ -240,7 +240,6 @@ def stream_sessionize(
     events_path: str,
     gap_seconds: int = 1800,
     checkpoint_dir: str | None = None,
-    n_buckets: int = 32,
 ) -> DataFrame:
     """Run gap-sessionization as an availableNow stateful stream over a
     parquet landing path; returns the emitted (closed) sessions.
@@ -251,14 +250,12 @@ def stream_sessionize(
     callers comparing against the batch twin should compare the closed
     prefix.
 
-    State is keyed by a ``n_buckets``-way hash of the user (see
-    :data:`BUCKET_STATE_SCHEMA`): per-user state rides arrays inside
-    the bucket row, one Python crossing per (bucket, batch). Size
-    ``n_buckets`` so a bucket's users fit one pandas frame comfortably
-    (at corpus scale: ≈ users/50k); the value is frozen into the
-    checkpoint by the grouping, so a RESUMED checkpoint must keep the
-    original (and a pre-bucketing checkpoint cannot be resumed by this
-    build — stage a fresh checkpoint to re-run).
+    State is keyed by a ``runner.STATE_BUCKETS``-way hash of the user
+    (see :data:`BUCKET_STATE_SCHEMA`): per-user state rides arrays
+    inside the bucket row, one Python crossing per (bucket, batch).
+    The count is frozen into the checkpoint by the grouping, which is
+    why it is a constant (a pre-bucketing checkpoint cannot be resumed
+    by this build — stage a fresh checkpoint to re-run).
     """
     configure(spark)
     checkpoint = checkpoint_dir or scratch_dir("ckpt_sess_")
@@ -279,7 +276,7 @@ def stream_sessionize(
     # (real bids are integers). Hadoop FileSystem API so the migration
     # also runs when the checkpoint lives on distributed storage — an
     # os.listdir pass would silently no-op there and the read-back
-    # would still break (same rationale as upsert._state_exists).
+    # would still break.
     fs, emitted_hpath = hadoop_fs(spark, emitted_dir)
     if fs.exists(emitted_hpath):
         legacy = [
@@ -329,13 +326,11 @@ def stream_sessionize(
         )
         .withWatermark("_et", "0 seconds")
     )
-    # xxhash64 skips NULL inputs and returns its seed (42), so NULL users
-    # land in bucket pmod(42, n_buckets) beside real users; the
-    # sessionizer's groupby(dropna=False) keeps them apart.
-    bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets)))
-    # applyInPandasWithState resolves grouping keys against the child's
-    # output — materialize the bucket as a column first
-    src = src.withColumn("_bucket", bucket)
+    # NULL users share bucket pmod(42, STATE_BUCKETS) with real users
+    # (see runner._user_bucket); the sessionizer's groupby(dropna=False)
+    # keeps them apart. applyInPandasWithState resolves grouping keys
+    # against the child's output — materialize the bucket as a column
+    src = src.withColumn("_bucket", _user_bucket())
     sessions = src.groupBy("_bucket").applyInPandasWithState(
         _make_bucket_sessionizer(gap_seconds),
         OUTPUT_SCHEMA,

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.util import scratch_dir
 from .daily import events_stream, stage_landing
-from .runner import _drain_to_batch_log
+from .runner import _drain_to_batch_log, _user_bucket
 
 OUTPUT_SCHEMA = "user_id long, n_events long, value_e2 long"
 
@@ -51,7 +51,7 @@ def _source(spark: SparkSession, events_path: str) -> DataFrame:
     )
 
 
-def _apws_totals(src: DataFrame, n_buckets: int = 32) -> DataFrame:
+def _apws_totals(src: DataFrame) -> DataFrame:
     """Running totals through applyInPandasWithState, keyed by a
     user-hash BUCKET with per-user state in parallel arrays: one Python
     crossing per (bucket, batch) instead of per user (the per-user form
@@ -99,12 +99,7 @@ def _apws_totals(src: DataFrame, n_buckets: int = 32) -> DataFrame:
                 }
             )
 
-    keyed = src.withColumn(
-        "_bucket",
-        F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets))).cast(
-            "long"
-        ),
-    )
+    keyed = src.withColumn("_bucket", _user_bucket())
     return keyed.groupBy("_bucket").applyInPandasWithState(
         fold,
         OUTPUT_SCHEMA,

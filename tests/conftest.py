@@ -3,15 +3,13 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
-    TESTDATA_TABLES,
-)
+
+from .oracle_utils import oracle_views
 
 SF_SMOKE = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("TEST_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -27,11 +25,6 @@ def spark():
 def duck():
     """DuckDB connection with the sf0.01 tables registered as plain views,
     mirroring the driver's oracle environment."""
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_ORACLE}/{t}.parquet')"
-        )
+    con = oracle_views(SF_ORACLE)
     yield con
     con.close()

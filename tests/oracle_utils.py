@@ -7,8 +7,27 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 
+import duckdb
 import pandas as pd
+
+from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
+    TESTDATA_TABLES,
+)
+
+
+def oracle_views(
+    sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
+) -> duckdb.DuckDBPyConnection:
+    """A fresh DuckDB connection with each of ``tables`` registered as a
+    plain view over ``<sf_dir>/<table>.parquet`` — the driver's oracle
+    environment."""
+    con = duckdb.connect()
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:

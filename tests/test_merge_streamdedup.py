@@ -101,6 +101,54 @@ def test_merge_write_applies_and_is_idempotent(spark, tmp_path):
     assert read() == first
 
 
+def test_merge_into_null_key_never_matches(spark):
+    """ANSI MERGE: a NULL-key source row does not match a NULL-key
+    target row, so both survive (merge_write differs on purpose)."""
+    cols = "k long, v long, tag string"
+    t = spark.createDataFrame([(None, 1, "t"), (1, 2, "a")], cols)
+    s = spark.createDataFrame([(None, 9, "s"), (1, 3, "b")], cols)
+    rows = sorted(
+        (r["k"] is None, r["k"], r["v"], r["tag"])
+        for r in merge_into(t, s, keys=["k"]).collect()
+    )
+    assert rows == [
+        (False, 1, 3, "b"),      # non-NULL key matched and updated
+        (True, None, 1, "t"),    # NULL target row untouched
+        (True, None, 9, "s"),    # NULL source row inserted beside it
+    ]
+
+
+def test_merge_write_upsert_semantics(spark, tmp_path):
+    """The streaming upsert's sink: a second batch replaces existing
+    keys, inserts new ones, keeps untouched keys — and a NULL key is
+    ONE key, so the later batch's NULL row replaces the earlier one."""
+    state = str(tmp_path / "state")
+    schema = (
+        "user_id long, last_event_id long, last_value double, last_ts_us long"
+    )
+    b1 = spark.createDataFrame(
+        [(1, 10, 1.0, 100), (2, 20, 2.0, 200), (None, 30, 3.0, 150)], schema
+    )
+    merge_write(spark, state, b1, ["user_id"], schema)
+    b2 = spark.createDataFrame(
+        [(2, 21, 2.5, 300), (7, 70, 7.0, 400), (None, 31, 3.5, 350)], schema
+    )
+    merge_write(spark, state, b2, ["user_id"], schema)
+    rows = [
+        (r["user_id"], (r["last_event_id"], r["last_value"], r["last_ts_us"]))
+        for r in spark.read.schema(schema).parquet(state).collect()
+    ]
+    assert dict(rows) == {
+        1: (10, 1.0, 100),   # untouched key survives its bucket's rewrite
+        2: (21, 2.5, 300),   # updated in place
+        7: (70, 7.0, 400),   # inserted
+        # exactly one NULL-user row survives, the later batch's (q116's
+        # oracle partitions by user_id, so NULL users form one group)
+        None: (31, 3.5, 350),
+    }
+    assert len(rows) == 4
+
+
 def test_merge_into_preserves_target_column_order(spark):
     # keys NOT leading in the target: output must still follow the
     # target's column order (positional consumers).
@@ -723,8 +771,6 @@ def test_null_text_convention_against_registered_oracles(spark, tmp_path):
     import os
     import sys
 
-    import duckdb
-
     sys.path.insert(
         0,
         os.path.join(
@@ -734,19 +780,14 @@ def test_null_text_convention_against_registered_oracles(spark, tmp_path):
     )
     from nulls_fixture import FAMILY, build_nulls_fixture
 
-    from .oracle_utils import compare
+    from .oracle_utils import compare, oracle_views
 
     from public_projet_data_engineering_tarification_electrique_spark.plans import (
         registry,
     )
 
     fx = build_nulls_fixture(str(tmp_path / "sfnulls"))
-    duck = duckdb.connect()
-    for t in ("documents", "events"):
-        duck.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(fx, t + '.parquet')}')"
-        )
+    duck = oracle_views(fx, ("documents", "events"))
     qmap = registry.QUERIES()
     for name in FAMILY:
         compare(

@@ -21,16 +21,12 @@ import math
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from public_projet_data_engineering_tarification_electrique_spark.plans import (  # noqa: E402
     registry,
 )
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (  # noqa: E402
-    TESTDATA_TABLES,
-)
+from tests.oracle_utils import oracle_views  # noqa: E402
 
 EPS = 1e-7  # boundary distance below which a rounding flip is plausible
 
@@ -84,12 +80,7 @@ def strip_rounds(sql: str) -> tuple[str, list[int]]:
 
 
 def audit(sf_dir: str) -> list[tuple[str, str, int, float]]:
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_views(sf_dir)
     risky: list[tuple[str, str, int, float]] = []
     for name, sql in registry.ORACLE_SQL.items():
         stripped, ks = strip_rounds(sql)
@@ -186,12 +177,7 @@ def certificate(sf_dir: str) -> list[tuple[str, str]]:
     value sits just BELOW a boundary (the risky class); ``−ε only``
     flips are an exact tie or a just-above value — cross-check against
     the attributable column audit. Advisory, not a gate."""
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_views(sf_dir)
 
     def canon(sql: str):
         rows = con.execute(sql).fetchall()

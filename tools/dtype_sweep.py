@@ -24,15 +24,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from public_projet_data_engineering_tarification_electrique_spark import get_spark  # noqa: E402
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry  # noqa: E402
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (  # noqa: E402
-    TESTDATA_TABLES,
-)
+from tests.oracle_utils import oracle_views  # noqa: E402
 
 
 def main() -> int:
@@ -44,12 +40,7 @@ def main() -> int:
         else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     )
     spark = get_spark(app_name="dtype_sweep")
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_views(sf_dir)
 
     oracles = registry.ORACLE_SQL
     kind_bad: list[str] = []

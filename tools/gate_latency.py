@@ -22,26 +22,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
-    TESTDATA_TABLES,
-)
+from tests.oracle_utils import oracle_views
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="gate-latency")
-    duck = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            duck.sql(
-                f"CREATE OR REPLACE VIEW {t} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
+    duck = oracle_views(sf_dir)
 
     rows: list[tuple[str, float, float]] = []
     for name, fn in registry.QUERIES().items():

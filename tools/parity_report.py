@@ -23,29 +23,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb
-
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
-    TESTDATA_TABLES,
-)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     sys.path.insert(0, os.path.join(REPO, "tests"))
-    from oracle_utils import compare  # the driver-equivalent gate
+    from oracle_utils import compare, oracle_views  # driver-equivalent gate
 
     spark = get_spark(app_name="parity-report")
-    duck = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            duck.sql(
-                f"CREATE OR REPLACE VIEW {t} AS "
-                f"SELECT * FROM read_parquet('{path}')"
-            )
+    duck = oracle_views(sf_dir)
 
     commit = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
@@ -82,12 +70,7 @@ def main() -> None:
     )
 
     fx = build_nulls_fixture(scratch_dir("sfnulls_"))
-    duck_fx = duckdb.connect()
-    for t in ("documents", "events"):
-        duck_fx.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(fx, t + '.parquet')}')"
-        )
+    duck_fx = oracle_views(fx, ("documents", "events"))
     qmap = registry.QUERIES()
     for name in FAMILY:
         try:

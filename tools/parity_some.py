@@ -21,14 +21,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-import duckdb
-
-from oracle_utils import compare
+from oracle_utils import compare, oracle_views
 from public_projet_data_engineering_tarification_electrique_spark import get_spark
 from public_projet_data_engineering_tarification_electrique_spark.plans import registry
-from public_projet_data_engineering_tarification_electrique_spark.sources.tables import (
-    TESTDATA_TABLES,
-)
 
 
 def main() -> None:
@@ -72,14 +67,7 @@ def main() -> None:
 
     spark = get_spark(app_name="parity-some")
     for sf_dir in sf_dirs:
-        duck = duckdb.connect()
-        for t in TESTDATA_TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(p):
-                duck.sql(
-                    f"CREATE OR REPLACE VIEW {t} AS "
-                    f"SELECT * FROM read_parquet('{p}')"
-                )
+        duck = oracle_views(sf_dir)
         for name in resolved:
             t0 = time.time()
             df = qmap[name](spark, sf_dir)
