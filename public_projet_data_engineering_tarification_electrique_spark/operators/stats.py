@@ -648,17 +648,20 @@ def grouped_moments(
         + 6 * mu * mu * (F.col("s2") / n)
         - 3 * mu * mu * mu * mu
     )
+    # shape moments are undefined on a degenerate group — NULL on both
+    # engines, never a divide-by-zero. The guard is on the largest
+    # divisor, not on m2: a variance like 1e-199 is positive but its
+    # square underflows to 0.0, which ANSI division rejects.
+    shaped = F.pow(m2, 2.0) > 0
     return sums.select(
         F.col(by),
         n.cast("long").alias("n"),
         F.round(mu + 1e-9, 4).alias("mean"),
         F.round(m2 + 1e-9, 4).alias("var_pop"),
-        # shape moments are undefined on a degenerate (zero-variance)
-        # group — NULL on both engines, never a divide-by-zero
-        F.when(m2 > 0, F.round(m3 / F.pow(m2, 1.5) + 1e-9, 4)).alias(
+        F.when(shaped, F.round(m3 / F.pow(m2, 1.5) + 1e-9, 4)).alias(
             "skewness"
         ),
-        F.when(m2 > 0, F.round(m4 / F.pow(m2, 2.0) - 3 + 1e-9, 4)).alias(
+        F.when(shaped, F.round(m4 / F.pow(m2, 2.0) - 3 + 1e-9, 4)).alias(
             "kurtosis"
         ),
     )
