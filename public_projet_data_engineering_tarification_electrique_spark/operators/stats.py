@@ -649,10 +649,11 @@ def grouped_moments(
         - 3 * mu * mu * mu * mu
     )
     # shape moments are undefined on a degenerate group — NULL on both
-    # engines, never a divide-by-zero. The guard is on the largest
-    # divisor, not on m2: a variance like 1e-199 is positive but its
-    # square underflows to 0.0, which ANSI division rejects.
-    shaped = F.pow(m2, 2.0) > 0
+    # engines, never a divide-by-zero. m2 > 0 catches a constant group,
+    # whose m2 cancels to 0 or a few ulps below it; pow(m2, 2) > 0
+    # catches a positive m2 like 1e-199 whose square underflows to 0.0,
+    # which ANSI division rejects.
+    shaped = (m2 > 0) & (F.pow(m2, 2.0) > 0)
     return sums.select(
         F.col(by),
         n.cast("long").alias("n"),

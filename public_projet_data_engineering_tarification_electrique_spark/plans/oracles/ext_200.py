@@ -912,8 +912,8 @@ ORACLE_SQL["q242_ewma_smoothing"] = """
 # q243: identical central-moment expansions, identical association
 # order — the only cross-engine difference is partial-sum order on
 # S1..S4, absorbed by the terminal 4-dp round.
-# Shape moments are NULL unless the squared variance is nonzero, the
-# same guard as the Spark side.
+# Shape moments are NULL unless the variance and its square are both
+# positive, the same guard as the Spark side.
 ORACLE_SQL["q243_grouped_moments"] = """
     WITH s AS (
       SELECT event_type, count(*) AS n, sum(value) AS s1,
@@ -925,13 +925,15 @@ ORACLE_SQL["q243_grouped_moments"] = """
     SELECT event_type, CAST(n AS BIGINT) AS n,
            round(s1 / n + 1e-9, 4) AS mean,
            round((s2 / n - (s1 / n) * (s1 / n)) + 1e-9, 4) AS var_pop,
-           CASE WHEN pow(s2 / n - (s1 / n) * (s1 / n), 2) > 0 THEN
+           CASE WHEN s2 / n - (s1 / n) * (s1 / n) > 0
+                 AND pow(s2 / n - (s1 / n) * (s1 / n), 2) > 0 THEN
              round((s3 / n - 3 * (s1 / n) * (s2 / n)
                     + 2 * (s1 / n) * (s1 / n) * (s1 / n))
                    / pow(s2 / n - (s1 / n) * (s1 / n), 1.5)
                    + 1e-9, 4)
            END AS skewness,
-           CASE WHEN pow(s2 / n - (s1 / n) * (s1 / n), 2) > 0 THEN
+           CASE WHEN s2 / n - (s1 / n) * (s1 / n) > 0
+                 AND pow(s2 / n - (s1 / n) * (s1 / n), 2) > 0 THEN
              round((s4 / n - 4 * (s1 / n) * (s3 / n)
                     + 6 * (s1 / n) * (s1 / n) * (s2 / n)
                     - 3 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n))
