@@ -445,7 +445,11 @@ def merge_write(
             )
         else:
             affected = []
-            target = spark.createDataFrame([], state_schema)
+            # limit(0) makes the empty target visible to the optimizer,
+            # which then drops the full-outer join for a projection of
+            # the batch (a bare empty frame is an opaque RDD scan and
+            # plans a sort-merge join with two extra exchanges)
+            target = spark.createDataFrame([], state_schema).limit(0)
 
         # ONE materialization per batch: the joined frame (affected
         # buckets + batch, never the table), clustered on _bucket so the
