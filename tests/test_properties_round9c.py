@@ -145,6 +145,36 @@ def test_grouped_moments_known_shapes(spark):
     assert r["skewness"] == 0.0 and r["kurtosis"] == -2.0
 
 
+def test_grouped_moments_degenerate_groups_are_null(spark):
+    """Shape moments are NULL, on both engines, for a constant group
+    (m2 cancels to a few ulps BELOW zero: three 0.1s give -1.7e-18)
+    and for a positive m2 whose square underflows (four 0.0s and one
+    2.1e-99 give m2 = 7e-199, pow(m2, 2) = 0.0)."""
+    import duckdb
+
+    from public_projet_data_engineering_tarification_electrique_spark.plans.registry import (
+        ORACLE_SQL,
+    )
+
+    data = [("c", 0.1)] * 3 + [("u", 0.0)] * 4 + [("u", 2.1e-99)]
+    s1, s2 = 0.1 + 0.1 + 0.1, 0.1 * 0.1 + 0.1 * 0.1 + 0.1 * 0.1
+    assert s2 / 3 - (s1 / 3) * (s1 / 3) < 0  # the cancellation case
+    df = spark.createDataFrame(data, "event_type string, value double")
+    spark_rows = {r["event_type"]: r for r in grouped_moments(df).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (event_type VARCHAR, value DOUBLE)")
+    con.executemany("INSERT INTO events VALUES (?, ?)", data)
+    cur = con.execute(ORACLE_SQL["q243_grouped_moments"])
+    cols = [c[0] for c in cur.description]
+    duck_rows = {r[0]: dict(zip(cols, r)) for r in cur.fetchall()}
+    for rows in (spark_rows, duck_rows):
+        assert set(rows) == {"c", "u"}
+        for g in ("c", "u"):
+            assert rows[g]["var_pop"] == 0.0, (g, rows[g])
+            assert rows[g]["skewness"] is None, (g, rows[g])
+            assert rows[g]["kurtosis"] is None, (g, rows[g])
+
+
 @settings(max_examples=5, deadline=None)
 @given(st.integers(min_value=1, max_value=12), st.integers(min_value=2, max_value=5))
 def test_gram_matrix_matches_numpy(spark, n, d):
@@ -253,6 +283,54 @@ def test_ewma_scan_tiny_partitions_hit_replay_path(spark):
         }
     want = _ewma_scan_model(vals)
     assert [got[i] for i in range(len(vals))] == want
+
+
+def test_q245_oracle_fold_matches_sequential_replay():
+    """q245's DuckDB oracle folds (digest, state) through one struct
+    accumulator, and its answer depends on the struct's field order
+    (DuckDB 1.0.0 reads a wrong ``acc.s`` when ``s`` is built before
+    ``d``). Pin n_rows, ewma_final and ewma_digest against the plain
+    Python replay on short sequences and one long one, with NULL
+    values, timestamp ties broken by event_id, and rows inserted out
+    of order."""
+    import duckdb
+
+    from public_projet_data_engineering_tarification_electrique_spark.plans.registry import (
+        ORACLE_SQL,
+    )
+
+    rng = np.random.default_rng(245)
+    seqs = [
+        [42.0],
+        [5.0, 50.0, 95.0, 20.0, 80.0],
+        [0.0, 0.0, 100.0, 0.00005, 99.99995, 33.33333],
+        [float(v) for v in np.round(rng.uniform(0, 100, 3000), 6)],
+    ]
+    t0 = dt.datetime(2024, 1, 1)
+    for vals in seqs:
+        # every third row shares the previous row's timestamp, so
+        # event_id decides the order; every seventh value is NULL
+        rows = []
+        for i, v in enumerate(vals):
+            ts = t0 + dt.timedelta(seconds=i - (i % 3 == 2))
+            rows.append((ts, i, v))
+            if i % 7 == 3:
+                rows.append((ts, len(vals) + i, None))
+        rows.reverse()
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE events (ts TIMESTAMP, event_id BIGINT, value DOUBLE)"
+        )
+        con.executemany("INSERT INTO events VALUES (?, ?, ?)", rows)
+        n_rows, final, digest = con.execute(
+            "SELECT n_rows, ewma_final, ewma_digest FROM ("
+            + ORACLE_SQL["q245_ewma_scan"]
+            + ")"
+        ).fetchone()
+        want = _ewma_scan_model(vals)
+        assert n_rows == len(vals)
+        assert final == want[-1]
+        assert digest == sum(round(w * 1e4) for w in want)
 
 
 def test_ewma_scan_nulls_dropped_and_replay_cap(spark):
