@@ -29,6 +29,12 @@ detection. Three countermeasures, all recorded IN the artifact:
   spread of 3 says absolute wall-clock that round is ±3× and only
   the normalized series is comparable.
 
+``python bench.py q16 q211_label_propagation ...`` times only the
+named queries (full name or ``qNN`` prefix) with the same warm-up,
+sweeps, runs and probes, skips the re-sweep, writes no artifact (a
+partial surface must not replace the full one) and prints the full
+record as one JSON line.
+
 The printed line is COMPACT — short keys ("q1".."q266"), 2-decimal
 seconds, no-space separators — because the driver only captures the
 last ~2000 chars of stdout (BENCH_r01..r03 recorded ``parsed: null``
@@ -67,6 +73,15 @@ def main() -> None:
     t_session = time.perf_counter() - t_start
 
     qmap = registry.QUERIES()
+    subset = sys.argv[1:]
+    names = []
+    for arg in subset:
+        hits = [k for k in qmap if k == arg or k.split("_", 1)[0] == arg]
+        if len(hits) != 1:
+            print(f"unknown or ambiguous query {arg!r}: {hits}", file=sys.stderr)
+            sys.exit(2)
+        names.append(hits[0])
+    names = names or list(qmap)
 
     # Warm-up: JVM JIT + parquet footers (q04), the events read path (q01),
     # and the Python/Arrow worker pool (q20 uses mapInPandas) — so the
@@ -88,7 +103,6 @@ def main() -> None:
 
     runs = int(os.environ.get("BENCH_RUNS", "2"))
     sweeps = int(os.environ.get("BENCH_SWEEPS", "2"))
-    names = list(qmap)
 
     # per sweep: {name: (raw_best, nearest_probe_secs)}
     sweep_results: list[dict[str, tuple[float, float]]] = []
@@ -136,7 +150,7 @@ def main() -> None:
             prev_raw = json.load(fh).get("queries", {})
     except (OSError, ValueError):
         pass
-    if prev_raw:
+    if prev_raw and not subset:
         current_min = {
             n: min(s[n][0] for s in sweep_results) for n in names
         }
@@ -236,6 +250,10 @@ def main() -> None:
         "probes_total": round(sum(all_probes), 3),
         "total_wall": round(time.perf_counter() - t_start, 3),
     }
+    if subset:
+        print(json.dumps(full, separators=(",", ":")))
+        spark.stop()
+        return
     # SF-tagged filename so a small-SF smoke run can't clobber the
     # committed full-scale artifact; keep writing the canonical
     # BENCH_FULL.json only for the default sf0.1 run the driver grades.

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import word_shingles
-from .util import ensure_parallelism
+from .util import NoFixpoint, _fixpoint, ensure_parallelism, scoped_conf
 
 
 def exact_dedup(
@@ -389,7 +389,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    loop_partitions: int | None = 8,
     local_threshold: int = 100_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
@@ -403,21 +402,16 @@ def connected_components(
     both on the node key; the old label rides along through the
     propagation step so convergence detection is a narrow filter-count
     over the just-materialized frame, not an extra node-keyed join.
-    ``localCheckpoint`` truncates lineage so the plan does not grow
-    with the iteration count (a lineage chain of joins would otherwise
-    re-execute from scratch each round and overwhelm the optimizer).
-
-    For adversarial graphs with large diameter at 100 TB scale, swap
-    the loop body for the large-star/small-star alternation (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) which
-    converges in O(log² n) rounds regardless of diameter — same
-    join+agg primitives, so the surrounding contract is unchanged.
+    The rounds run through ``util._fixpoint`` (lazy cut per round, the
+    changed-row count as the round's one job).
 
     Output: (node, component) where component = min node id reachable.
     If min-label propagation has not converged within ``max_iter``
     rounds (a long-chain graph whose diameter exceeds the budget), the
     computation FALLS BACK to the large-star/small-star alternation
-    rather than raising — same output contract, O(log² n) rounds.
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14) rather than raising — same output contract, O(log² n)
+    rounds regardless of diameter.
 
     Small-graph fast path: when the symmetrized-distinct edge list has
     at most ``local_threshold`` rows (a BOUNDED driver collect — the
@@ -433,19 +427,6 @@ def connected_components(
     unchanged; the threshold only ever moves work driver-side when the
     graph provably fits.
     """
-    from .util import scoped_conf
-
-    # The edge list materializes under the SESSION partitioning (its
-    # upstream — shingling, similarity scoring — is corpus-sized work);
-    # the fixpoint loop below shuffles only the graph, which for dedup
-    # workloads is orders of magnitude smaller, so its rounds run under
-    # a pinned low partition count (each round is join+agg+checkpoint:
-    # at 32 partitions that is mostly empty-task scheduling).
-    # LAZY checkpoints throughout the loop: the convergence count is
-    # the action that materializes each round's frame, so one job per
-    # iteration does both (an eager checkpoint + separate count would
-    # double the tiny-job scheduling overhead that dominates this loop
-    # at bench scale — halving it cut the q47/q195 family measurably).
     # the symmetrizing union consumes `edges` TWICE — without a cut the
     # whole upstream pair pipeline (blocking join + scoring) executes
     # once per branch (ReuseExchange only dedupes the identical
@@ -465,62 +446,59 @@ def connected_components(
         n_edges = sym.count()
         if n_edges <= local_threshold:
             return _local_union_find(sym)
-    with scoped_conf(
-        edges.sparkSession, "spark.sql.shuffle.partitions", loop_partitions
-    ):
+
+    def step(comp: DataFrame) -> DataFrame:
+        nbr_min = (
+            sym.join(
+                comp.select(
+                    F.col("node").alias("_b"), F.col("component").alias("_nc")
+                ),
+                on="_b",
+            )
+            .groupBy(F.col("_a").alias("node"))
+            .agg(F.min("_nc").alias("_min_nbr"))
+        )
+        return comp.join(nbr_min, on="node", how="left").select(
+            "node",
+            F.col("component").alias("_old"),
+            F.least(
+                F.col("component"),
+                F.coalesce(F.col("_min_nbr"), F.col("component")),
+            ).alias("component"),
+        )
+
+    # The edge list materializes under the SESSION partitioning (its
+    # upstream — shingling, similarity scoring — is corpus-sized work);
+    # both loops shuffle only the graph, which for dedup workloads is
+    # orders of magnitude smaller, so their rounds run under a pinned
+    # low partition count (at 32 partitions a round is mostly
+    # empty-task scheduling).
+    with scoped_conf(edges.sparkSession, "spark.sql.shuffle.partitions", 8):
         comp = (
             sym.select(F.col("_a").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
             .localCheckpoint(eager=False)
         )
-        for _ in range(max_iter):
-            nbr_min = (
-                sym.join(
-                    comp.select(
-                        F.col("node").alias("_b"), F.col("component").alias("_nc")
-                    ),
-                    on="_b",
-                )
-                .groupBy(F.col("_a").alias("node"))
-                .agg(F.min("_nc").alias("_min_nbr"))
-            )
-            new = (
-                comp.join(nbr_min, on="node", how="left")
-                .select(
-                    "node",
-                    F.col("component").alias("_old"),
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("_min_nbr"), F.col("component")),
-                    ).alias("component"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # this count materializes `new`'s checkpoint — the lineage
-            # is still truncated per round, in the same job
-            changed = new.filter(F.col("component") != F.col("_old")).count()
-            comp = new.drop("_old")
-            if changed == 0:
-                return comp
-    # Diameter exceeded the propagation budget (a long-chain graph):
-    # switch to the O(log² n) large-star/small-star alternation instead
-    # of degrading round-by-round. Same output contract.
-    # reuse the checkpointed symmetric edge set: passing the RAW edges
-    # frame would re-execute its whole upstream lineage (shingling,
-    # blocking join, scoring) — exactly on the large inputs that
-    # exhaust the propagation budget
-    return connected_components_star(
-        sym, src="_a", dst="_b", loop_partitions=loop_partitions
-    )
+        try:
+            return _fixpoint(
+                comp,
+                step,
+                max_iter,
+                lambda _, new: new.filter(F.col("component") != F.col("_old")),
+            ).drop("_old")
+        except NoFixpoint:
+            # reuse the checkpointed symmetric edge set: passing the RAW
+            # edges frame would re-execute its whole upstream lineage
+            # (shingling, blocking join, scoring) — exactly on the large
+            # inputs that exhaust the propagation budget
+            return connected_components_star(sym, src="_a", dst="_b")
 
 
 def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 40,
-    loop_partitions: int | None = 8,
 ) -> DataFrame:
     """Connected components via large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -530,20 +508,18 @@ def connected_components_star(
     common case in diameter rounds).
 
     Per round, both phases are one join + one grouped min over the
-    CURRENT edge set (which only shrinks toward a star forest), with
-    ``localCheckpoint`` lineage truncation:
+    CURRENT edge set (which only shrinks toward a star forest):
     - large-star: every node's strictly-larger neighbors re-attach to
       its smallest neighbor-or-self;
     - small-star: with edges oriented high→low, the smaller neighbors
       (and the node) attach to the minimum.
     At fixpoint edges form stars centered at each component's minimum
-    node. Convergence check: (count, xor-of-hashes) signature of the
-    edge set — order-insensitive and one agg pass per round.
+    node. The rounds run through ``util._fixpoint``; a round changed
+    nothing when the new edge set equals the previous one (an empty
+    symmetric difference, counted exactly). 40 rounds are the budget.
 
     Output: (node, component) where component = min node id reachable.
     """
-    from .util import scoped_conf
-
     def _canon(e: DataFrame) -> DataFrame:
         # undirected edge as (hi, lo), self-loops dropped
         return (
@@ -555,6 +531,35 @@ def connected_components_star(
             .distinct()
         )
 
+    def step(cur: DataFrame) -> DataFrame:
+        # -- large-star ------------------------------------------------
+        sym = cur.union(
+            cur.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
+        )
+        mins = sym.groupBy("_u").agg(
+            F.least(F.min("_v"), F.first("_u")).alias("_m")
+        )
+        cur = _canon(
+            sym.join(mins, on="_u")
+            .filter(F.col("_v") > F.col("_u"))
+            .select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
+        )
+        # -- small-star (edges already oriented _u > _v) ---------------
+        mins = cur.groupBy("_u").agg(F.min("_v").alias("_m"))
+        attached = cur.join(mins, on="_u")
+        return _canon(
+            attached.select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
+            .union(attached.select("_u", F.col("_m").alias("_v")))
+        )
+
+    def moved(prev: DataFrame, new: DataFrame) -> DataFrame:
+        # edges in exactly one of the two sets
+        return (
+            prev.withColumn("_p", F.lit(1))
+            .join(new.withColumn("_n", F.lit(1)), ["_u", "_v"], "full")
+            .filter(F.col("_p").isNull() | F.col("_n").isNull())
+        )
+
     raw = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
     # node universe from the RAW edges (before self-loop dropping), so a
     # node appearing only as (x, x) still emits (x, x) like the
@@ -563,48 +568,8 @@ def connected_components_star(
         raw.select(F.col("_u").alias("node"))
         .union(raw.select(F.col("_v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    cur = _canon(raw).localCheckpoint(eager=True)
-    with scoped_conf(
-        edges.sparkSession, "spark.sql.shuffle.partitions", loop_partitions
-    ):
-        prev_sig: tuple[int, int] | None = None
-        for _ in range(max_iter):
-            # -- large-star --------------------------------------------
-            sym = cur.union(
-                cur.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-            )
-            mins = sym.groupBy("_u").agg(
-                F.least(F.min("_v"), F.first("_u")).alias("_m")
-            )
-            cur = _canon(
-                sym.join(mins, on="_u")
-                .filter(F.col("_v") > F.col("_u"))
-                .select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
-            ).localCheckpoint(eager=True)
-            # -- small-star (edges already oriented _u > _v) -----------
-            mins = cur.groupBy("_u").agg(F.min("_v").alias("_m"))
-            attached = cur.join(mins, on="_u")
-            cur = _canon(
-                attached.select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
-                .union(attached.select("_u", F.col("_m").alias("_v")))
-            ).localCheckpoint(eager=True)
-            sig_row = cur.agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    # order-insensitive (xor), overflow-free signature
-                    F.expr("bit_xor(xxhash64(_u, _v))"), F.lit(0)
-                ).alias("h"),
-            ).head()
-            sig = (sig_row.n, sig_row.h)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        else:
-            raise RuntimeError(
-                f"connected_components_star: no fixpoint in {max_iter} rounds"
-            )
+    cur = _fixpoint(_canon(raw).localCheckpoint(eager=False), step, 40, moved)
     # stars: every non-center node has exactly one edge to its center
     return nodes.join(
         cur.select(F.col("_u").alias("node"), F.col("_v").alias("_root")),

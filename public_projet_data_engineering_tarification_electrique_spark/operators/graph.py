@@ -21,8 +21,12 @@ power-law graph (the "last reducer" holding a celebrity node).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .util import _fixpoint
 
 
 def triangle_stats(
@@ -193,10 +197,9 @@ def label_propagation(
     against the current assignment plus one (node, label) hash agg —
     O(m) per round, map-side combined, no all-pairs anything. The
     frontier is monotone (labeled stays labeled), so `rounds` bounds
-    both cost and the propagation radius; assignments are
-    localCheckpoint'd per round to keep the plan from growing
-    superlinearly with rounds (same discipline as
-    ``dedup.connected_components``).
+    both cost and the propagation radius; the rounds run through
+    ``util._fixpoint``, which cuts the assignment lazily each round so
+    the plan does not grow with `rounds`.
 
     Output: (id, label, round) — round 0 = seed, r ≥ 1 = assigned in
     round r; nodes never reached are absent (callers LEFT-join to
@@ -204,14 +207,10 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    assign = (
-        nodes.filter(F.col(label_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(label_col).alias("label"),
-            F.lit(0).cast("int").alias("round"),
-        )
-        .localCheckpoint(eager=False)
+    seeds = nodes.filter(F.col(label_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.col(label_col).alias("label"),
+        F.lit(0).cast("int").alias("round"),
     )
     unlabeled = nodes.filter(F.col(label_col).isNull()).select(
         F.col(id_col).alias("id")
@@ -224,9 +223,16 @@ def label_propagation(
     adj = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).localCheckpoint(eager=False)
-    for r in range(1, rounds + 1):
+    w = Window.partitionBy("_s").orderBy(F.desc("_n"), F.asc("_lab"))
+    round_no = itertools.count(1)
+
+    def step(assign: DataFrame) -> DataFrame:
+        # still unlabeled: not assigned in any earlier round
+        open_ids = unlabeled.join(
+            assign.filter(F.col("round") > 0), on="id", how="left_anti"
+        )
         votes = (
-            adj.join(unlabeled, adj["_s"] == unlabeled["id"], "leftsemi")
+            adj.join(open_ids, adj["_s"] == open_ids["id"], "leftsemi")
             .join(
                 assign.select(
                     F.col("id").alias("_d"), F.col("label").alias("_lab")
@@ -236,25 +242,18 @@ def label_propagation(
             .groupBy("_s", "_lab")
             .agg(F.count("*").alias("_n"))
         )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_s").orderBy(
-            F.desc("_n"), F.asc("_lab")
-        )
         picked = (
             votes.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1)
             .select(
                 F.col("_s").alias("id"),
                 F.col("_lab").alias("label"),
-                F.lit(r).cast("int").alias("round"),
+                F.lit(next(round_no)).cast("int").alias("round"),
             )
         )
-        assign = assign.unionByName(picked).localCheckpoint(eager=True)
-        unlabeled = unlabeled.join(
-            picked.select("id"), on="id", how="left_anti"
-        )
-    return assign
+        return assign.unionByName(picked)
+
+    return _fixpoint(seeds.localCheckpoint(eager=False), step, rounds)
 
 
 def kcore_peel(
@@ -281,10 +280,10 @@ def kcore_peel(
     Input must be a SYMMETRIC distinct edge list (both (u,v) and
     (v,u) present, no self-loops). Per round: two semi-joins restrict
     edges to the surviving nodes, one hash agg on the node id
-    recomputes degrees — partitioned by node key throughout, the
-    alive set (|V| rows) stays orders smaller than the edges, and a
-    lazy localCheckpoint per round stops the lineage from compounding
-    across rounds (the q47 CC discipline).
+    recomputes degrees — partitioned by node key throughout, and the
+    alive set (|V| rows) stays orders smaller than the edges. The
+    rounds run through ``util._fixpoint``, whose lazy cut per round
+    stops the lineage from compounding across rounds.
 
     Output: (node, core_deg) for the final survivors, where core_deg
     is the node's degree in the PREVIOUS round's induced subgraph —
@@ -297,21 +296,21 @@ def kcore_peel(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).localCheckpoint(eager=False)
-    alive = e.select(F.col("src").alias("node")).distinct()
-    survivors = None
-    for _ in range(rounds):
-        e2 = e.join(
-            alive.select(F.col("node").alias("src")), "src", "left_semi"
-        ).join(alive.select(F.col("node").alias("dst")), "dst", "left_semi")
-        survivors = (
-            e2.groupBy("src")
+
+    def step(alive: DataFrame) -> DataFrame:
+        # both sides alias `node`, so the two semi-joins share one
+        # exchange of the alive set
+        return (
+            e.join(alive.select(F.col("node").alias("src")), "src", "left_semi")
+            .join(alive.select(F.col("node").alias("dst")), "dst", "left_semi")
+            .groupBy(F.col("src").alias("node"))
             .agg(F.count("*").cast("long").alias("core_deg"))
             .filter(F.col("core_deg") >= k)
         )
-        alive = survivors.select(F.col("src").alias("node")).localCheckpoint(
-            eager=False
-        )
-    return survivors.select(F.col("src").alias("node"), "core_deg")
+
+    return _fixpoint(
+        e.select(F.col("src").alias("node")).distinct(), step, rounds
+    )
 
 
 def adamic_adar_linkpred(

@@ -41,6 +41,7 @@ surface:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -105,7 +106,9 @@ class MergeProjections:
     contract), pass to :func:`merge_write`; the one-shot callers
     (:func:`merge_into`, :func:`merge_changes`) build it inline, so
     clause semantics — and their validation — live in exactly one
-    place either way.
+    place either way. The CDF pieces are built on the first
+    :meth:`changes` call: ``merge_into``, and ``merge_write`` without a
+    changelog, never need them.
     """
 
     def __init__(
@@ -134,12 +137,15 @@ class MergeProjections:
         if unknown:
             raise ValueError(f"update_set targets non-value columns: {unknown}")
 
-        matched = (
+        self._update_set = update_set
+        self._delete_when = delete_when
+        self._insert_when = insert_when
+        self._matched = (
             F.col("_t_present").isNotNull() & F.col("_s_present").isNotNull()
         )
-        src_only = F.col("_t_present").isNull()
+        self._src_only = F.col("_t_present").isNull()
+        matched, src_only = self._matched, self._src_only
 
-        # --- into (post-merge state) pieces ---
         keep = F.lit(True)
         if delete_when is not None:
             keep = keep & ~(matched & F.coalesce(delete_when, F.lit(False)))
@@ -161,7 +167,12 @@ class MergeProjections:
                     .alias(c)
                 )
 
-        # --- changes (CDF row set) pieces ---
+    @functools.cached_property
+    def _cdf(self) -> tuple[Column, list[Column], Column, list[Column]]:
+        """(change type, changed columns, pre-image filter, pre-image
+        columns) of the CDF row set."""
+        matched, src_only = self._matched, self._src_only
+        delete_when, insert_when = self._delete_when, self._insert_when
         deleted = matched & (
             F.coalesce(delete_when, F.lit(False))
             if delete_when is not None
@@ -172,28 +183,28 @@ class MergeProjections:
             if insert_when is not None
             else F.lit(True)
         )
-        post_label = "update_postimage" if include_preimages else "update"
-        self._change = (
+        post_label = "update_postimage" if self.include_preimages else "update"
+        change = (
             F.when(deleted, F.lit("delete"))
             .when(matched, F.lit(post_label))
             .when(inserted, F.lit("insert"))
         )
-        self._changes_cols = []
+        changes_cols = []
         for c in self.state_cols:
             if c in self.keys:
-                self._changes_cols.append(F.col(c))
+                changes_cols.append(F.col(c))
             else:
-                updated = update_set.get(c, src(c))
-                self._changes_cols.append(
+                updated = self._update_set.get(c, src(c))
+                changes_cols.append(
                     F.when(F.col("_change_type") == "delete", F.col(c))
                     .when(F.col("_change_type") == post_label, updated)
                     .otherwise(src(c))
                     .alias(c)
                 )
-        self._pre_filter = matched & ~deleted
-        self._pre_cols = [F.col(c) for c in self.state_cols] + [
+        pre_cols = [F.col(c) for c in self.state_cols] + [
             F.lit("update_preimage").alias("_change_type")
         ]
+        return change, changes_cols, matched & ~deleted, pre_cols
 
     def into(self, joined: DataFrame) -> DataFrame:
         """merge_into's clause semantics as a pure projection of the
@@ -203,17 +214,18 @@ class MergeProjections:
     def changes(self, joined: DataFrame) -> DataFrame:
         """merge_changes's CDF row set as a pure projection of the
         :func:`_merge_join` frame."""
-        affected = joined.withColumn("_change_type", self._change).filter(
+        change, changes_cols, pre_filter, pre_cols = self._cdf
+        affected = joined.withColumn("_change_type", change).filter(
             F.col("_change_type").isNotNull()
         )
-        out = affected.select(*self._changes_cols, "_change_type")
+        out = affected.select(*changes_cols, "_change_type")
         if not self.include_preimages:
             return out
         # Delta CDF's update_preimage rows: the target's values BEFORE
         # the merge, for exactly the matched-and-updated keys. Same
         # joined frame, plain target-column projection — the shared
         # subplan means Catalyst computes the full-outer join once.
-        pre = joined.filter(self._pre_filter).select(*self._pre_cols)
+        pre = joined.filter(pre_filter).select(*pre_cols)
         return out.unionByName(pre)
 
 

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import _fixpoint
+
 GRID_DP = 4
 V_UNIT = 1_000_000
 
@@ -177,12 +179,13 @@ def top_principal_component(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    # Materialize the d²-row Gram ONCE (localCheckpoint — bounded by
-    # the DIMENSION, a structural bound, not the corpus): each
-    # iteration's u feeds BOTH the max-abs scalar and the next v, so a
-    # fully lazy loop would re-derive the whole upstream subtree 2^t
-    # times (measured: 6 lazy iterations re-ran the corpus Gram ~64×,
-    # 100 s on a 500-row input). Same for the d-row v each step.
+    # Cut the d²-row Gram ONCE (bounded by the DIMENSION, a structural
+    # bound, not the corpus), and let ``util._fixpoint`` cut the d-row
+    # v every step: each step's u feeds BOTH the max-abs scalar and the
+    # next v, so an uncut loop would re-derive the whole upstream
+    # subtree 2^t times (measured: 6 uncut iterations re-ran the corpus
+    # Gram ~64×, 100 s on a 500-row input). The cuts are lazy: the
+    # first action that reads each one fills it, once.
     # d² rows in ONE partition: the iteration's matvecs are trivial
     # single-task work, and leaving them on the session's shuffle
     # partitioning costs ~32 empty tasks × 2 stages × iters of pure
@@ -191,54 +194,54 @@ def top_principal_component(
         gram_long(emb, vec_col)
         .select("i", "j", F.col("g").cast("decimal(20,0)").alias("g"))
         .coalesce(1)
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    # the d-vector as a d-row plan; all-ones start on the 1e6 grid
-    v = g.select("j").distinct().select(
-        "j", F.lit(V_UNIT).cast("decimal(10,0)").alias("v")
-    )
-    for _ in range(iters):
-        u = (
+
+    def matvec(v: DataFrame) -> DataFrame:
+        return (
             g.join(F.broadcast(v), "j")
             .groupBy("i")
             .agg(F.sum(F.col("g") * F.col("v")).alias("u"))
-            .coalesce(1)
         )
+
+    def step(v: DataFrame) -> DataFrame:
+        u = matvec(v).coalesce(1)
         m = u.agg(F.max(F.abs(F.col("u"))).alias("_m"))
-        v = (
-            u.crossJoin(F.broadcast(m))
-            .select(
-                F.col("i").alias("j"),
-                # an all-zero Gram makes max|u| = 0 and the
-                # renormalization 0/0 = NaN, which the ANSI long cast
-                # would kill far from the root cause — fail loudly at
-                # the actual defect (every snapped coordinate is zero
-                # at this grid)
-                F.when(
-                    F.col("_m") > 0,
-                    F.round(
-                        F.col("u").cast("double")
-                        / F.col("_m").cast("double")
-                        * V_UNIT
-                    ).cast("long"),
-                )
-                .otherwise(
-                    F.raise_error(
-                        "top_principal_component: Gram is all zeros — "
-                        "embeddings quantize to zero on the 1e-4 grid"
-                    ).cast("long")
-                )
-                .cast("decimal(10,0)")
-                .alias("v"),
+        return u.crossJoin(F.broadcast(m)).select(
+            F.col("i").alias("j"),
+            # an all-zero Gram makes max|u| = 0 and the
+            # renormalization 0/0 = NaN, which the ANSI long cast
+            # would kill far from the root cause — fail loudly at
+            # the actual defect (every snapped coordinate is zero
+            # at this grid)
+            F.when(
+                F.col("_m") > 0,
+                F.round(
+                    F.col("u").cast("double")
+                    / F.col("_m").cast("double")
+                    * V_UNIT
+                ).cast("long"),
             )
-            .localCheckpoint()
+            .otherwise(
+                F.raise_error(
+                    "top_principal_component: Gram is all zeros — "
+                    "embeddings quantize to zero on the 1e-4 grid"
+                ).cast("long")
+            )
+            .cast("decimal(10,0)")
+            .alias("v"),
         )
-    # final exact matvec for the Rayleigh quotient
-    u = (
-        g.join(F.broadcast(v), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("g") * F.col("v")).alias("u"))
+
+    # the d-vector as a d-row plan; all-ones start on the 1e6 grid
+    v = _fixpoint(
+        g.select("j").distinct().select(
+            "j", F.lit(V_UNIT).cast("decimal(10,0)").alias("v")
+        ),
+        step,
+        iters,
     )
+    # final exact matvec for the Rayleigh quotient
+    u = matvec(v)
     vu = u.join(
         F.broadcast(v.select(F.col("j").alias("i"), "v")), "i"
     )

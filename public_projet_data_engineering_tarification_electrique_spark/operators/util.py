@@ -7,6 +7,7 @@ import contextlib
 import re
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -172,6 +173,41 @@ def scoped_conf(spark: SparkSession, key: str, value: str | int | None):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+class NoFixpoint(RuntimeError):
+    """A converging loop used up its round budget."""
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    changed: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Iterate ``state = step(state)``: the one loop driver behind every
+    operator that cuts lineage each round (both connected-components
+    loops, k-core peeling, label propagation, power iteration).
+
+    - Each round's result is cut by a LAZY ``localCheckpoint``, so the
+      plan stays one round deep however many rounds run, and the cut
+      launches no result job of its own: the round's first action
+      fills it. (Under AQE, planning the cut still runs the round's
+      shuffle stages, as any lazy checkpoint does.)
+    - Without ``changed`` the loop runs exactly ``rounds`` rounds: the
+      fixed-round contracts, whose oracles unroll the same count.
+    - With ``changed``, ``changed(prev, new)`` is the frame of rows the
+      round changed. Counting it is the one job per round, and that
+      job also materializes the round's cut. No changed row is the
+      fixpoint; none within ``rounds`` rounds raises ``NoFixpoint``.
+    """
+    for _ in range(rounds):
+        prev, state = state, step(state).localCheckpoint(eager=False)
+        if changed is not None and changed(prev, state).count() == 0:
+            return state
+    if changed is None:
+        return state
+    raise NoFixpoint(f"no fixpoint in {rounds} rounds")
 
 
 def read_json_marker(spark, dir_path: str, name: str) -> dict | None:

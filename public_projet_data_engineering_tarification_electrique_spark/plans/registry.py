@@ -5217,8 +5217,8 @@ def q211_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 30% of vectors with vec_id % 10 < 3, everything else
     unlabeled — the cheap way to extend sparse human labels over a
     corpus once the kNN graph exists. Each round is one equi-join of
-    the k-bounded edge list + one (node, label) agg; assignments are
-    localCheckpoint'd per round (connected-components discipline).
+    the k-bounded edge list + one (node, label) agg; the assignment
+    is cut lazily each round (``operators.util._fixpoint``).
     Output: per final label (−1 = never reached), node counts by the
     round they were labeled in."""
     from ..operators.graph import label_propagation

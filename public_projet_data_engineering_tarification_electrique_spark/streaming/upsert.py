@@ -31,7 +31,7 @@ from .daily import (
     stage_landing_under_checkpoint,
 )
 from .runner import _drain
-from ..operators.merge import merge_write
+from ..operators.merge import MergeProjections, merge_write
 from ..operators.util import hadoop_fs, scratch_dir
 
 STATE_SCHEMA = (
@@ -97,10 +97,20 @@ def stream_upsert_latest(
             F.unix_micros(F.col("_m.ts")).alias("last_ts_us"),
         )
     )
+    # the merge expression trees, built once per stream; a stream row
+    # IS a state row, so both column lists are `latest`'s
+    proj = MergeProjections(
+        latest.columns, latest.columns, ["user_id"], None, None, None
+    )
     _drain(
         latest.writeStream.outputMode("update").foreachBatch(
             lambda batch, _bid: merge_write(
-                batch.sparkSession, state, batch, ["user_id"], STATE_SCHEMA
+                batch.sparkSession,
+                state,
+                batch,
+                ["user_id"],
+                STATE_SCHEMA,
+                projections=proj,
             )
         ),
         checkpoint,

@@ -566,34 +566,47 @@ def test_anchored_neardup_subset_and_planted_pair(spark):
 
 def test_star_cc_equals_min_label_on_random_graphs(spark):
     """large-star/small-star (Kiveris et al.) must produce exactly the
-    min-label components on random graphs."""
+    min-label components on random graphs and on a 60-node chain, and
+    none of the three paths may depend on the session's shuffle
+    partition count."""
     import random
 
     from public_projet_data_engineering_tarification_electrique_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
+    from public_projet_data_engineering_tarification_electrique_spark.operators.util import (
+        scoped_conf,
+    )
 
     rng = random.Random(7)
-    for trial in range(3):
-        n, m = 40, 45
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(m)
-        ]
+    graphs = [
+        [(rng.randrange(40), rng.randrange(40)) for _ in range(45)]
+        for _ in range(3)
+    ]
+    graphs.append([(i, i + 1) for i in range(59)])
+    for trial, edges in enumerate(graphs):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {
-            (r.node, r.component)
-            for r in connected_components(df, local_threshold=0).collect()
-        }
-        b = {
-            (r.node, r.component)
-            for r in connected_components_star(df).collect()
-        }
-        c = {
-            (r.node, r.component)
-            for r in connected_components(df).collect()  # union-find path
-        }
-        assert a == b == c, f"trial {trial}: star/min-label/union-find differ"
+        for parts in (1, 7):
+            with scoped_conf(spark, "spark.sql.shuffle.partitions", parts):
+                a = {
+                    (r.node, r.component)
+                    for r in connected_components(
+                        df, local_threshold=0
+                    ).collect()
+                }
+                b = {
+                    (r.node, r.component)
+                    for r in connected_components_star(df).collect()
+                }
+                c = {
+                    (r.node, r.component)
+                    for r in connected_components(df).collect()  # union-find
+                }
+            assert a == b == c, (
+                f"graph {trial}, {parts} partitions: "
+                "star/min-label/union-find differ"
+            )
 
 
 def test_cc_long_chain_falls_back_to_star(spark):

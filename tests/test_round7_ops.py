@@ -89,6 +89,66 @@ def test_label_propagation_rejects_zero_rounds(spark):
             F.col("id").alias("src"), F.col("id").alias("dst")), rounds=0)
 
 
+def test_fixed_round_loops_cut_without_a_job_per_round(spark):
+    """The fixed-round loops cut each round lazily (``util._fixpoint``):
+    a cut launches no job of its own, so building 4 rounds launches no
+    more jobs than building 1, apart from the broadcasts a round's own
+    hints plan. AQE runs the shuffle stages of ANY lazy checkpoint when
+    it is planned, so the count is taken with AQE and automatic
+    broadcasts off; an eager per-round cut would still add one job a
+    round there."""
+    import time
+
+    from public_projet_data_engineering_tarification_electrique_spark.operators.graph import (
+        kcore_peel,
+    )
+    from public_projet_data_engineering_tarification_electrique_spark.operators.spectral import (
+        top_principal_component,
+    )
+    from public_projet_data_engineering_tarification_electrique_spark.operators.util import (
+        scoped_conf,
+    )
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(12) for b in range(12) if a != b and a * b % 3 != 1],
+        "src long, dst long",
+    )
+    nodes = spark.createDataFrame(
+        [(i, "x" if i % 5 == 0 else None) for i in range(12)],
+        "id long, label string",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i * j % 5) - 2.0 for j in range(3)]) for i in range(20)],
+        "id long, embedding array<double>",
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def build_jobs(build) -> int:
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        build()
+        # a broadcast planned by a cut runs on a background thread
+        time.sleep(0.5)
+        return len(tracker.getJobIdsForGroup(None) or []) - before
+
+    # loop -> (build at `rounds`, broadcast hints per round)
+    loops = {
+        "kcore_peel": (lambda r: kcore_peel(edges, k=3, rounds=r), 0),
+        "label_propagation": (
+            lambda r: label_propagation(nodes, edges, rounds=r), 0
+        ),
+        "top_principal_component": (
+            lambda r: top_principal_component(emb, iters=r), 2
+        ),
+    }
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"), scoped_conf(
+        spark, "spark.sql.autoBroadcastJoinThreshold", "-1"
+    ):
+        for name, (build, hints) in loops.items():
+            one = build_jobs(lambda: build(1))
+            four = build_jobs(lambda: build(4))
+            assert four - one == 3 * hints, f"{name}: {one} jobs at 1 round, {four} at 4"
+
+
 def test_dpp_subquery_in_fact_scan(spark):
     """The fact scan's partition filter must be a runtime DPP subquery
     — the entire point of the partitioned materialization."""
